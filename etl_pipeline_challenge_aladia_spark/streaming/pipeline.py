@@ -21,6 +21,8 @@ without external services.
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,8 +31,9 @@ from pyspark.sql import functions as F
 from etl_pipeline_challenge_aladia_spark.operators.structure import parse_envelope
 from etl_pipeline_challenge_aladia_spark.pipeline import envelopes_to_warehouse
 from etl_pipeline_challenge_aladia_spark.sinks import (
+    _promote_dir,
+    _recover_dir,
     merge_warehouse_batch,
-    upsert_warehouse_batch,
 )
 
 
@@ -155,17 +158,14 @@ def run_cdc_file_stream(
     warehouse_path: str,
     checkpoint_dir: str,
     quarantine_path: str | None = None,
-    sink: str = "rewrite",
     view_path: str | None = None,
 ) -> None:
     """Run the CDC pipeline over all currently-available files and stop
     (Trigger.AvailableNow) — the batch-equivalent streaming execution used
     by tests and backfills. A production deployment drops the trigger and
-    runs continuously; nothing else changes.
-
-    ``sink`` picks the upsert strategy: ``"rewrite"`` (full-table rewrite,
-    simplest) or ``"merge"`` (bucket-partitioned MERGE, I/O proportional to
-    the batch — the scale path).
+    runs continuously; nothing else changes. Each micro-batch upserts
+    into the warehouse through the bucketed MERGE sink
+    (``merge_warehouse_batch``), with I/O proportional to the batch.
 
     ``view_path`` additionally maintains the materialized per-video stats
     view (views.py) INSIDE each micro-batch: after the upsert commits, the
@@ -178,7 +178,7 @@ def run_cdc_file_stream(
     (
         envelopes.writeStream.foreachBatch(
             make_cdc_batch_processor(
-                warehouse_path, quarantine_path, sink, view_path
+                warehouse_path, quarantine_path, view_path=view_path
             )
         )
         .option("checkpointLocation", checkpoint_dir)
@@ -210,21 +210,20 @@ def _split_off_quarantine(
 def make_cdc_batch_processor(
     warehouse_path: str,
     quarantine_path: str | None = None,
-    sink: str = "rewrite",
+    sink: str = "merge",
     view_path: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """The foreachBatch body shared by every CDC ingress (file-stream,
-    Kafka): quarantine corrupt envelopes, transform, idempotent upsert."""
-    if sink not in ("rewrite", "merge"):
-        raise ValueError(f"unknown sink {sink!r}: expected 'rewrite' or 'merge'")
+    Kafka): quarantine corrupt envelopes, transform, idempotent MERGE
+    upsert. ``sink`` accepts only ``"merge"``, the one warehouse sink;
+    it stays for callers that name it."""
+    if sink != "merge":
+        raise ValueError(f"unknown sink {sink!r}: the only sink is 'merge'")
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         ok = _split_off_quarantine(batch, quarantine_path)
         rows = envelopes_to_warehouse(ok, with_ingestion_time=True)
-        if sink == "merge":
-            merge_warehouse_batch(batch.sparkSession, rows, warehouse_path)
-        else:
-            upsert_warehouse_batch(batch.sparkSession, rows, warehouse_path)
+        merge_warehouse_batch(batch.sparkSession, rows, warehouse_path)
         if view_path is not None:
             from etl_pipeline_challenge_aladia_spark.views import (
                 refresh_video_stats_view,
@@ -269,7 +268,6 @@ def run_cdc_kafka_stream(
     warehouse_path: str,
     checkpoint_dir: str,
     quarantine_path: str | None = None,
-    sink: str = "rewrite",
     records: DataFrame | None = None,
     available_now: bool = False,
     source_options: dict[str, str] | None = None,
@@ -301,7 +299,7 @@ def run_cdc_kafka_stream(
     writer = (
         observe_decode_health(envelopes)
         .writeStream.foreachBatch(
-            make_cdc_batch_processor(warehouse_path, quarantine_path, sink)
+            make_cdc_batch_processor(warehouse_path, quarantine_path)
         )
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -365,7 +363,6 @@ def replay_quarantine(
     spark: SparkSession,
     quarantine_path: str,
     warehouse_path: str,
-    sink: str = "merge",
 ) -> tuple[int, int]:
     """Reprocess quarantined raw messages — the operational other half of
     the quarantine contract (X5): after a producer or parser fix, replay
@@ -380,21 +377,6 @@ def replay_quarantine(
     in-place truncate. The reference requeues corrupt messages forever
     (consumer nack/requeue loop); this is the bounded alternative.
     """
-    import os
-    import shutil
-
-    from etl_pipeline_challenge_aladia_spark.operators.structure import (
-        parse_envelope,
-    )
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        _promote_dir,
-        _recover_dir,
-        merge_warehouse_batch,
-        upsert_warehouse_batch,
-    )
-
-    if sink not in ("rewrite", "merge"):
-        raise ValueError(f"unknown sink {sink!r}: expected 'rewrite' or 'merge'")
     _recover_dir(quarantine_path, quarantine_path + "._old")
     if not os.path.exists(quarantine_path):
         return 0, 0
@@ -406,10 +388,7 @@ def replay_quarantine(
     rows = envelopes_to_warehouse(ok, with_ingestion_time=True)
     n_recovered = rows.count()
     if n_recovered:
-        if sink == "merge":
-            merge_warehouse_batch(spark, rows, warehouse_path)
-        else:
-            upsert_warehouse_batch(spark, rows, warehouse_path)
+        merge_warehouse_batch(spark, rows, warehouse_path)
     still_bad = raw.join(
         decoded.filter(F.col("_corrupt")).select(F.col("_raw").alias("raw")),
         "raw",

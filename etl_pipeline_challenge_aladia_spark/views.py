@@ -31,7 +31,10 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_challenge_aladia_spark.functions.rounding import round_half_up
+from etl_pipeline_challenge_aladia_spark.functions.rounding import (
+    avg_fixed_point,
+    round_half_up,
+)
 from etl_pipeline_challenge_aladia_spark.sinks import (
     _promote_dir,
     _read_manifest,
@@ -46,12 +49,16 @@ _VIEW_META = "_view.json"
 def video_stats(rows: DataFrame) -> DataFrame:
     """The maintained aggregate: per-video session count, average watched
     ratio (shared half-up rounding), and max watched seconds over ACTIVE
-    (non-tombstone) rows."""
+    (non-tombstone) rows. The average is the order-independent fixed-point
+    mean, so an incremental refresh and a full rebuild agree bit for bit
+    whatever the partitioning."""
     active = rows
     if "is_deleted" in rows.columns:
         active = rows.filter(~F.coalesce(F.col("is_deleted"), F.lit(False)))
     return active.groupBy("video_id").agg(
-        round_half_up(F.avg("watched_ratio"), 4).alias("avg_watched_ratio"),
+        round_half_up(avg_fixed_point(F.col("watched_ratio")), 4).alias(
+            "avg_watched_ratio"
+        ),
         F.count(F.lit(1)).alias("n_sessions"),
         F.max("watched_seconds").alias("max_watched_seconds"),
     )

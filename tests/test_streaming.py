@@ -62,8 +62,7 @@ def state(spark, wh_path):
     }
 
 
-@pytest.mark.parametrize("sink", ["rewrite", "merge"])
-def test_stream_end_to_end_with_redelivery_and_corrupt(spark, dirs, sink):
+def test_stream_end_to_end_with_redelivery_and_corrupt(spark, dirs):
     batch1 = [
         envelope("insert", "doc_1", 1, watched=10),
         envelope("update", "doc_1", 2, watched=20),
@@ -73,9 +72,7 @@ def test_stream_end_to_end_with_redelivery_and_corrupt(spark, dirs, sink):
         "this is not json {",  # corrupt -> quarantine
     ]
     write_lines(os.path.join(dirs["in"], "batch1.json"), batch1)
-    run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink=sink
-    )
+    run_cdc_file_stream(spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"])
 
     s1 = state(spark, dirs["wh"])
     assert s1 == {
@@ -93,9 +90,7 @@ def test_stream_end_to_end_with_redelivery_and_corrupt(spark, dirs, sink):
         envelope("update", "doc_2", 5, watched=50, video="video_2"),  # stale, loses
     ]
     write_lines(os.path.join(dirs["in"], "batch2.json"), batch2)
-    run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink=sink
-    )
+    run_cdc_file_stream(spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"])
 
     s2 = state(spark, dirs["wh"])
     assert s2 == {
@@ -114,6 +109,45 @@ def test_stream_checkpoint_no_reprocess(spark, dirs):
     # warehouse is untouched
     run_cdc_file_stream(spark, dirs["in"], dirs["wh"], dirs["ckpt"])
     assert state(spark, dirs["wh"]) == s1
+
+
+def test_cli_cdc_subcommand_writes_merge_table(spark, dirs):
+    """``cdc`` runs the file-stream pipeline into the bucketed merge sink;
+    it has no ``--sink`` option, so passing one is an argparse error."""
+    from etl_pipeline_challenge_aladia_spark.__main__ import main
+    from etl_pipeline_challenge_aladia_spark.sinks import _read_manifest
+
+    write_lines(
+        os.path.join(dirs["in"], "b1.json"),
+        [
+            envelope("insert", "doc_1", 1, watched=10),
+            envelope("update", "doc_1", 2, watched=20),
+            envelope("insert", "doc_2", 3, watched=30, video="video_2"),
+        ],
+    )
+    argv = [
+        "cdc", "--input", dirs["in"], "--warehouse", dirs["wh"],
+        "--checkpoint", dirs["ckpt"],
+    ]
+    assert main(argv) == 0
+    assert state(spark, dirs["wh"]) == {
+        ("doc_1", "video_1", "session_1"): (20, 2),
+        ("doc_2", "video_2", "session_1"): (30, 3),
+    }
+    assert _read_manifest(dirs["wh"])["buckets"]
+    with pytest.raises(SystemExit):
+        main(argv + ["--sink", "merge"])
+
+
+def test_cdc_batch_processor_accepts_only_merge_sink(tmp_path):
+    from etl_pipeline_challenge_aladia_spark.streaming.pipeline import (
+        make_cdc_batch_processor,
+    )
+
+    wh = str(tmp_path / "wh")
+    assert callable(make_cdc_batch_processor(wh, sink="merge"))
+    with pytest.raises(ValueError, match="only sink is 'merge'"):
+        make_cdc_batch_processor(wh, sink="rewrite")
 
 
 def test_merge_sink_rewrites_only_touched_buckets(spark, tmp_path):
@@ -260,42 +294,48 @@ def test_merge_sink_recovers_crashed_precommit_attempt(spark, tmp_path):
     assert read_warehouse(spark, path).count() == before
 
 
-def test_merge_sink_adopts_legacy_bucket_layout(spark, tmp_path):
-    """Tables written by the pre-manifest merge sink (``_bucket=N``
-    partition dirs, including an interrupted ``._old_bucket_`` promote)
-    migrate in place on the first manifest-era merge, losing no rows."""
-    import glob
-    import shutil
+def test_merge_sink_refuses_foreign_layouts(spark, tmp_path):
+    """The merge sink only writes into a fresh path or its own bucketed
+    manifest table. An ``append_warehouse`` table (data, no manifest) and
+    a manifest without ``buckets`` both raise ``ValueError`` and are left
+    exactly as they were."""
+    import json
 
     from pyspark.sql import functions as F
 
-    from etl_pipeline_challenge_aladia_spark.schemas import DEDUP_KEY
     from etl_pipeline_challenge_aladia_spark.sinks import (
-        _read_manifest,
+        append_warehouse,
         merge_warehouse_batch,
         read_warehouse,
     )
 
-    path = str(tmp_path / "wh")
-    base = _merge_base_frame(spark)
-    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in DEDUP_KEY]), F.lit(8)).cast("int")
-    base.withColumn("_bucket", bucket).write.partitionBy("_bucket").parquet(path)
-    # legacy crash window: one bucket moved aside, replacement missing
-    victim = sorted(glob.glob(os.path.join(path, "_bucket=*")))[0]
-    bk = victim.rsplit("=", 1)[-1]
-    shutil.move(victim, f"{path}._old_bucket_{bk}")
+    def listing(root):
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, files in os.walk(root)
+            for f in files
+        )
 
-    one = _merge_base_frame(spark, version=2, watched=999).filter(
-        F.col("original_id") == "doc_3"
+    path = str(tmp_path / "appended")
+    append_warehouse(_merge_base_frame(spark), path)
+    before = listing(path)
+    two = _merge_base_frame(spark, version=2, watched=999).filter(
+        F.col("original_id").isin("doc_3", "doc_4")
     )
-    merge_warehouse_batch(spark, one, path, num_buckets=8)
-    rows = {
-        r["original_id"]: r["watched_seconds"]
-        for r in read_warehouse(spark, path).collect()
-    }
-    assert len(rows) == 50 and rows["doc_3"] == 999
-    assert _read_manifest(path) is not None
-    assert not glob.glob(os.path.join(path, "_bucket=*"))  # fully adopted
+    with pytest.raises(ValueError, match="no _manifest.json"):
+        merge_warehouse_batch(spark, two, path, num_buckets=8)
+    assert listing(path) == before
+    assert read_warehouse(spark, path).count() == 50
+
+    foreign = str(tmp_path / "foreign")
+    os.makedirs(foreign)
+    with open(os.path.join(foreign, "_manifest.json"), "w") as f:
+        json.dump({"version": 1, "table_dir": "v00000001"}, f)
+    with pytest.raises(ValueError, match="no 'buckets'"):
+        merge_warehouse_batch(spark, two, foreign, num_buckets=8)
+    with pytest.raises(ValueError, match="no 'buckets'"):
+        read_warehouse(spark, foreign)
+    assert os.listdir(foreign) == ["_manifest.json"]
 
 
 def test_merge_snapshot_isolation_under_concurrent_reads(spark, tmp_path):
@@ -395,64 +435,6 @@ def test_decode_health_observed_metrics(spark, dirs):
     assert total == 3 and corrupt == 1
 
 
-def test_upsert_sink_snapshot_versions_and_migration(spark, tmp_path):
-    """The rewrite sink's atomicity contract: each upsert publishes a new
-    table-version directory via the manifest (previous version retained one
-    commit for in-flight readers), a stray pre-commit version is GC'd, and
-    a pre-manifest day-partitioned table migrates in place on first write."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        _read_manifest,
-        read_warehouse,
-        upsert_warehouse_batch,
-    )
-
-    path = str(tmp_path / "wh")
-    base = _merge_base_frame(spark)
-    # pre-manifest layout: day dirs directly under path
-    base.withColumn("_day", F.to_date("original_timestamp")).write.partitionBy(
-        "_day"
-    ).parquet(path)
-
-    upd = _merge_base_frame(spark, version=2, watched=555).filter(
-        F.col("original_id") == "doc_1"
-    )
-    upsert_warehouse_batch(spark, upd, path)
-    m1 = _read_manifest(path)
-    assert m1 is not None and m1["table_dir"] == "v00000001"
-    rows = {
-        r["original_id"]: r["watched_seconds"]
-        for r in read_warehouse(spark, path).collect()
-    }
-    assert len(rows) == 50 and rows["doc_1"] == 555
-
-    # stray version from a crashed pre-commit attempt: invisible, then GC'd
-    stray = os.path.join(path, "v00000099")
-    shutil.copytree(os.path.join(path, "v00000001"), stray)
-    assert read_warehouse(spark, path).count() == 50
-
-    upsert_warehouse_batch(
-        spark,
-        _merge_base_frame(spark, version=3, watched=7).filter(
-            F.col("original_id") == "doc_2"
-        ),
-        path,
-    )
-    m2 = _read_manifest(path)
-    assert m2["table_dir"] == "v00000002" and m2["garbage"] == ["v00000001"]
-    assert not os.path.exists(stray)
-    # previous version still on disk for in-flight readers (lag-1 retention)
-    assert os.path.isdir(os.path.join(path, "v00000001"))
-    rows = {
-        r["original_id"]: r["watched_seconds"]
-        for r in read_warehouse(spark, path).collect()
-    }
-    assert rows["doc_2"] == 7 and rows["doc_1"] == 555
-
-
 def test_read_warehouse_key_scans_single_bucket(spark, tmp_path):
     """Point lookup reads exactly one bucket directory (manifest-routed) —
     1/num_buckets of the table's files — and returns the right row."""
@@ -470,97 +452,6 @@ def test_read_warehouse_key_scans_single_bucket(spark, tmp_path):
     assert files
     dirs = {f.rsplit("/", 2)[-2] for f in files}
     assert len(dirs) == 1 and next(iter(dirs)).startswith("b")
-
-
-def test_compact_warehouse_on_manifest_upsert_table(spark, tmp_path):
-    """Compaction resolves through the manifest on rewrite-sink tables:
-    files shrink inside the published version dir, rows and manifest are
-    untouched."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        _read_manifest,
-        compact_warehouse,
-        read_warehouse,
-        upsert_warehouse_batch,
-    )
-
-    path = str(tmp_path / "wh")
-    # several small upserts -> many small files inside the current version
-    for v in range(1, 4):
-        upsert_warehouse_batch(
-            spark,
-            _merge_base_frame(spark, n=30, version=v).repartition(4),
-            path,
-        )
-    m = _read_manifest(path)
-    vdir = os.path.join(path, m["table_dir"])
-    before = sorted(map(str, read_warehouse(spark, path).collect()))
-
-    def n_files():
-        return len(glob.glob(os.path.join(vdir, "_day=*", "*.parquet")))
-
-    # split into ~10-row files, then compact back down — both rewrites land
-    # inside the published version dir and never touch the manifest
-    assert compact_warehouse(spark, path, target_rows_per_file=10) >= 1
-    fragmented = n_files()
-    assert fragmented >= 3
-    assert compact_warehouse(spark, path, target_rows_per_file=1_000_000) >= 1
-    assert n_files() < fragmented
-    assert sorted(map(str, read_warehouse(spark, path).collect())) == before
-    assert _read_manifest(path) == m  # manifest untouched by compaction
-
-
-def test_upsert_snapshot_isolation_under_concurrent_reads(spark, tmp_path):
-    """The rewrite sink's atomicity under a live reader: while an upsert
-    rewriting the whole table runs in another thread, every observed
-    row-set equals the complete pre- or post-upsert snapshot."""
-    import threading
-
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        read_warehouse,
-        upsert_warehouse_batch,
-    )
-
-    path = str(tmp_path / "wh")
-    upsert_warehouse_batch(spark, _merge_base_frame(spark, n=40), path)
-    pre = frozenset(
-        (r["original_id"], r["version"], r["watched_seconds"])
-        for r in read_warehouse(spark, path).collect()
-    )
-    update = _merge_base_frame(spark, n=40, version=2, watched=777)
-    post = frozenset((f"doc_{i}", 2, 777) for i in range(40))
-    assert pre != post
-
-    err: list = []
-
-    def run_upsert():
-        try:
-            upsert_warehouse_batch(spark, update, path)
-        except Exception as ex:  # noqa: BLE001
-            err.append(ex)
-
-    t = threading.Thread(target=run_upsert)
-    t.start()
-    observed = []
-    while t.is_alive():
-        snap = frozenset(
-            (r["original_id"], r["version"], r["watched_seconds"])
-            for r in read_warehouse(spark, path).collect()
-        )
-        observed.append(snap)
-    t.join()
-    assert not err
-    bad = [s for s in observed if s != pre and s != post]
-    assert not bad, f"{len(bad)} torn snapshot(s) of {len(observed)}"
-    assert observed, "reader never overlapped the upsert"
-    final = frozenset(
-        (r["original_id"], r["version"], r["watched_seconds"])
-        for r in read_warehouse(spark, path).collect()
-    )
-    assert final == post
 
 
 def test_vacuum_and_num_buckets_pinning(spark, tmp_path):
@@ -770,22 +661,22 @@ def test_time_travel_merge_table(spark, tmp_path):
 
 
 def test_time_travel_upsert_table(spark, tmp_path):
-    """Same contract on the rewrite sink: full past table versions stay
-    readable for retain_snapshots commits; non-manifest paths refuse
-    version= with a clear error."""
+    """Same contract through the keyed upsert at its default bucketing: full
+    past table versions stay readable for retain_snapshots commits;
+    non-manifest paths refuse version= with a clear error."""
     from pyspark.sql import functions as F
 
     from etl_pipeline_challenge_aladia_spark.sinks import (
+        merge_warehouse_batch,
         read_warehouse,
         table_history,
-        upsert_warehouse_batch,
     )
 
     path = str(tmp_path / "wh")
-    upsert_warehouse_batch(
+    merge_warehouse_batch(
         spark, _merge_base_frame(spark, n=30), path, retain_snapshots=3
     )
-    upsert_warehouse_batch(
+    merge_warehouse_batch(
         spark,
         _merge_base_frame(spark, n=30, version=2, watched=99).filter(
             F.col("original_id") == "doc_3"
@@ -795,6 +686,7 @@ def test_time_travel_upsert_table(spark, tmp_path):
     )
     assert [h["version"] for h in table_history(path)] == [1, 2]
     v1 = read_warehouse(spark, path, version=1)
+    assert v1.count() == 30
     assert v1.filter(F.col("original_id") == "doc_3").first()[
         "watched_seconds"
     ] == 30
@@ -909,25 +801,6 @@ def test_erase_warehouse_keys_gdpr(spark, tmp_path):
     assert {
         r["original_id"] for r in read_warehouse(spark, path).collect()
     } == now
-
-
-def test_erase_warehouse_keys_rewrite_table(spark, tmp_path):
-    """Erasure falls back to a single-version full rewrite on upsert-sink
-    tables and stays snapshot-atomic."""
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        erase_warehouse_keys,
-        read_warehouse,
-        upsert_warehouse_batch,
-    )
-
-    path = str(tmp_path / "wh")
-    upsert_warehouse_batch(spark, _merge_base_frame(spark, n=20), path)
-    doomed = spark.createDataFrame(
-        [("doc_5", "v", "s")], ["original_id", "video_id", "session_id"]
-    )
-    assert erase_warehouse_keys(spark, doomed, path) == 1
-    rows = {r["original_id"] for r in read_warehouse(spark, path).collect()}
-    assert "doc_5" not in rows and len(rows) == 19
 
 
 def test_merge_sink_schema_evolution(spark, tmp_path):
@@ -1045,7 +918,7 @@ def test_replay_quarantine_recovers_fixed_messages(spark, tmp_path):
         f.write(json.dumps({"raw": good, "quarantined_at": "2024-01-01"}) + "\n")
         f.write(json.dumps({"raw": bad, "quarantined_at": "2024-01-01"}) + "\n")
 
-    n_rec, n_bad = replay_quarantine(spark, quar, wh, sink="merge")
+    n_rec, n_bad = replay_quarantine(spark, quar, wh)
     assert (n_rec, n_bad) == (1, 1)
     rows = {r["original_id"]: r for r in read_warehouse(spark, wh).collect()}
     assert rows["doc_q"]["watched_seconds"] == 42
@@ -1053,7 +926,7 @@ def test_replay_quarantine_recovers_fixed_messages(spark, tmp_path):
     assert residue.count() == 1 and residue.first()["raw"] == bad
 
     # replaying the residue again recovers nothing and leaves it intact
-    assert replay_quarantine(spark, quar, wh, sink="merge") == (0, 1)
+    assert replay_quarantine(spark, quar, wh) == (0, 1)
     assert spark.read.json(quar).count() == 1
 
 
@@ -1246,7 +1119,7 @@ def test_kafka_stream_contract_end_to_end(spark, tmp_path):
     def run():
         run_cdc_kafka_stream(
             spark, None, None, wh, ckpt,
-            quarantine_path=quar, sink="merge",
+            quarantine_path=quar,
             records=kafka_shaped_file_stream(spark, in_dir),
             available_now=True,
         )
@@ -1319,7 +1192,7 @@ def test_kafka_stream_against_real_broker(spark, tmp_path):
     wh = str(tmp_path / "wh")
     run_cdc_kafka_stream(
         spark, bootstrap, topic, wh, str(tmp_path / "ckpt"),
-        sink="merge", available_now=True,
+        available_now=True,
     )
     got = {r["original_id"] for r in read_warehouse(spark, wh).collect()}
     assert got == {"doc_k"}
@@ -1375,7 +1248,7 @@ def test_replay_full_loop_never_regresses_live_state(spark, dirs):
         [good_a_v1[:-5], envelope("insert", "doc_b", 1, watched=11)],
     )
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink="merge"
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
     assert spark.read.json(dirs["quar"]).count() == 1
     assert ("doc_a", "video_1", "session_1") not in state(spark, dirs["wh"])
@@ -1387,7 +1260,7 @@ def test_replay_full_loop_never_regresses_live_state(spark, dirs):
          envelope("insert", "doc_c", 1, watched=33)],  # corrupt twin below
     )
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink="merge"
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
     s = state(spark, dirs["wh"])
     assert s[("doc_a", "video_1", "session_1")] == (22, 2)
@@ -1406,7 +1279,7 @@ def test_replay_full_loop_never_regresses_live_state(spark, dirs):
          json.dumps({"raw": envelope("insert", "doc_d", 1, watched=44),
                      "quarantined_at": "t"})],
     )
-    n_rec, n_bad = replay_quarantine(spark, dirs["quar"], dirs["wh"], sink="merge")
+    n_rec, n_bad = replay_quarantine(spark, dirs["quar"], dirs["wh"])
     assert (n_rec, n_bad) == (2, 0)
 
     s2 = state(spark, dirs["wh"])
@@ -1422,7 +1295,7 @@ def test_replay_full_loop_never_regresses_live_state(spark, dirs):
          envelope("update", "doc_a", 1, watched=1)],  # stale live, loses too
     )
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink="merge"
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
     s3 = state(spark, dirs["wh"])
     assert s3[("doc_a", "video_1", "session_1")] == (22, 2)
@@ -1966,7 +1839,7 @@ def test_required_field_envelopes_quarantine_not_ingest(spark, dirs):
          envelope("insert", "doc_ok", 1, watched=5)],
     )
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink="merge"
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
     assert set(state(spark, dirs["wh"])) == {("doc_ok", "video_1", "session_1")}
     quar = spark.read.json(dirs["quar"])
@@ -1986,7 +1859,7 @@ def test_required_field_envelopes_quarantine_not_ingest(spark, dirs):
          json.dumps({"raw": envelope("insert", "doc_y", 1, watched=8),
                      "quarantined_at": "t"})],
     )
-    assert replay_quarantine(spark, dirs["quar"], dirs["wh"], sink="merge") == (2, 0)
+    assert replay_quarantine(spark, dirs["quar"], dirs["wh"]) == (2, 0)
     s = state(spark, dirs["wh"])
     assert s[("doc_x", "video_1", "session_1")] == (7, 1)
     assert s[("doc_y", "video_1", "session_1")] == (8, 1)

@@ -49,6 +49,44 @@ def _as_sorted(df):
     return sorted(map(tuple, df.collect()))
 
 
+def test_video_stats_average_is_order_independent(spark):
+    """The same rows in different orders and partitionings give a
+    bit-identical ``avg_watched_ratio``. The ratios have an exact mean of
+    0.75365, a half-up tie at four decimals, so a plain double sum rounds
+    to 0.7536 or 0.7537 depending on the order it adds them in."""
+    import itertools
+    import math
+
+    ratios = [0.6627, 0.8418, 0.5634, 0.9467]
+
+    def folded(order):
+        total = 0.0
+        for r in order:
+            total += r
+        return math.floor(total / len(order) * 10000.0 + 0.5) / 10000.0
+
+    by_result = {folded(p): p for p in itertools.permutations(ratios)}
+    assert set(by_result) == {0.7536, 0.7537}  # summation order matters
+
+    def avg(order, partitions):
+        rows = [
+            (f"doc_{i}", "video_x", int(r * 100), r) for i, r in enumerate(order)
+        ]
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, partitions),
+            "original_id string, video_id string, watched_seconds long, "
+            "watched_ratio double",
+        )
+        return video_stats(df).first()["avg_watched_ratio"]
+
+    got = {
+        avg(order, partitions)
+        for order in by_result.values()
+        for partitions in (1, len(ratios))
+    }
+    assert got == {0.7537}
+
+
 def test_incremental_refresh_equals_full_rebuild(spark, tmp_path):
     table = str(tmp_path / "t")
     view = str(tmp_path / "v")
@@ -155,7 +193,7 @@ def test_streaming_pipeline_maintains_view(spark, tmp_path):
             envelope("insert", "d3", 1, 80, "video_b"),
         ]) + "\n")
     run_cdc_file_stream(
-        spark, d["in"], d["wh"], d["ckpt"], sink="merge", view_path=d["view"]
+        spark, d["in"], d["wh"], d["ckpt"], view_path=d["view"]
     )
     v1 = {r["video_id"]: r for r in read_view(spark, d["view"]).collect()}
     assert v1["video_a"]["n_sessions"] == 2
@@ -164,7 +202,7 @@ def test_streaming_pipeline_maintains_view(spark, tmp_path):
     with open(os.path.join(d["in"], "b2.json"), "w") as f:
         f.write(envelope("update", "d1", 2, 99, "video_a") + "\n")
     run_cdc_file_stream(
-        spark, d["in"], d["wh"], d["ckpt"], sink="merge", view_path=d["view"]
+        spark, d["in"], d["wh"], d["ckpt"], view_path=d["view"]
     )
     v2 = {r["video_id"]: r for r in read_view(spark, d["view"]).collect()}
     assert v2["video_a"]["max_watched_seconds"] == 99
