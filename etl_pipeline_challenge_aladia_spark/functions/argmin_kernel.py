@@ -29,7 +29,8 @@ bit-for-bit, which is what keeps the SQL oracles hash-exact:
   ``min(struct(dist_fx, cluster))`` contract.
 
 ``tests/test_assign_kernel_parity.py`` pins kernel-vs-SQL equality on
-real fixture data and adversarial ties.
+real fixture data and adversarial ties, against the all-expression plans
+kept in ``tests/sql_reference.py``.
 """
 
 from __future__ import annotations
@@ -161,7 +162,7 @@ def local_kmeans(
 def build_hier_plan(
     cent_ids: np.ndarray, C: np.ndarray, k2: int, scale: int = 6
 ) -> dict:
-    """Precompute the two-level routing tables of ``_argmin_assign_hier``
+    """Precompute the two-level routing tables (``similarity._hier_plans``)
     from a collected centroid table: inner k-means (k2 super-cells,
     inner_iters=2) over the centroids, keep only NON-EMPTY super-cells
     (those the final member assignment used), and group member centroids
@@ -183,7 +184,7 @@ def hier_argmin(V: np.ndarray, plan: dict) -> tuple[np.ndarray, np.ndarray]:
     """Two-level routed exact argmin: route each row to its nearest
     non-empty super-cell (ties to the lower super-cell id), then exact
     argmin against that super-cell's member centroids (ties to the lower
-    cluster id) — `_argmin_assign_hier`, op for op."""
+    cluster id) over the tables of ``build_hier_plan``."""
     routed, _ = argmin_cells(V, plan["sc_ids"], plan["SC"])
     n = V.shape[0]
     labels = np.empty(n, dtype=np.int64)
@@ -232,15 +233,21 @@ def round_half_up4(x: np.ndarray) -> np.ndarray:
 #: cosine matrix a tile materializes regardless of cell size.
 PAIR_TILE_ROWS = 4096
 
-#: rows-per-pandas-group cap for the in-cell sweeps: PAIR_TILE_ROWS only
-#: bounds the cosine-matrix INTERMEDIATE — applyInPandas still
-#: materializes the whole group's (rows x dim) input per task, so a
-#: skewed giant cell (mass-duplicated embeddings all landing in one
-#: k-means cell) would OOM a worker regardless of k. Cells above this
-#: cap are split into id-rank blocks and swept tile-by-tile (min-canon /
-#: max-cos partials compose exactly); 64k rows x 64 dims x 8 B = 32 MB
-#: per group-side, comfortably inside a task.
-PAIR_GROUP_ROWS = 1 << 16
+#: per-pandas-group input byte budget for the in-cell sweeps:
+#: PAIR_TILE_ROWS only bounds the cosine-matrix INTERMEDIATE —
+#: applyInPandas still materializes the whole group's (rows x dim) input
+#: per task, so a skewed giant cell (mass-duplicated embeddings all
+#: landing in one k-means cell) would OOM a worker regardless of k. Cells
+#: above ``pair_group_rows(dim)`` rows are split into id-rank blocks and
+#: swept tile-by-tile (min-canon / max-cos partials compose exactly).
+#: 32 MB per group-side = 64k rows at 64 dims, comfortably inside a task.
+PAIR_GROUP_BYTES = 1 << 25
+
+
+def pair_group_rows(dim: int) -> int:
+    """Rows per pandas group that keep a group's float64 (rows x dim)
+    input within ``PAIR_GROUP_BYTES`` (at least one row)."""
+    return max(1, PAIR_GROUP_BYTES // (8 * max(1, dim)))
 
 
 def cell_dup_sweep(
@@ -251,8 +258,8 @@ def cell_dup_sweep(
     some lower-id cell-mate i at round4(cosine) >= threshold, emit
     (ids[j], min such ids[i], max such cosine). ``ids`` MUST be sorted
     ascending (the min-id tie-break); tiles i-blocks so memory stays
-    bounded for giant cells. The SQL plan's dot-product prefilter is a
-    conservative margin over the exact cosine, so sweeping exact cosines
+    bounded for giant cells. The SQL reference plan's dot-product prefilter
+    is a conservative margin over the exact cosine, so sweeping exact cosines
     directly yields the identical row set (and IS what the oracle
     computes)."""
     m = ids.shape[0]

@@ -250,89 +250,75 @@ def minhash_signatures(
     One explode + one groupBy: shuffle volume is (docs x shingles) hashed
     rows, independent of corpus pair count.
 
-    Default implementation is an Arrow kernel (guide §4.2): tokenize,
-    shingle, md5-fold and take all ``num_perm`` permutation minima per
-    document INSIDE one map stage — no shingle explode (docs x shingles
-    rows), no 64-column aggregate, no exchange at all. Exactness: the
-    kernel reproduces the SQL column semantics operation for operation —
+    Implemented as an Arrow kernel (guide §4.2): tokenize, shingle,
+    md5-fold and take all ``num_perm`` permutation minima per document
+    INSIDE one map stage — no shingle explode (docs x shingles rows), no
+    64-column aggregate, no exchange at all. Exactness: the kernel
+    reproduces the SQL column semantics operation for operation —
     ``split(" ")`` keeps empty tokens on both sides, docs with fewer
     than n tokens produce NO row (the explode-over-empty contract), md5
     is md5, and the (h*a+b) % 2147483647 lattice is exact int64 on both
-    sides (max |h*a+b| < 2^63). ``SEMANTIC_ASSIGN_IMPL=sql`` keeps the
-    explode + 64-min aggregate as the bit-equality reference
+    sides (max |h*a+b| < 2^63). The explode + 64-min aggregate plan is
+    the bit-equality reference in tests/sql_reference.py
     (tests/test_assign_kernel_parity.py pins signature equality).
     """
+    import numpy as np
+
     params = _perm_params(num_perm, seed)
-    if _assign_impl() != "sql":
-        import numpy as np
+    src = fan_out(docs).select(
+        F.col(id_col).alias("id"), F.col(text_col).alias("t")
+    )
+    id_t = src.schema["id"].dataType.simpleString()
+    A = np.array([a for a, _ in params], dtype=np.int64)
+    B = np.array([b for _, b in params], dtype=np.int64)
 
-        src = fan_out(docs).select(
-            F.col(id_col).alias("id"), F.col(text_col).alias("t")
-        )
-        id_t = src.schema["id"].dataType.simpleString()
-        A = np.array([a for a, _ in params], dtype=np.int64)
-        B = np.array([b for _, b in params], dtype=np.int64)
+    def fn(batches):
+        import hashlib
 
-        def fn(batches):
-            import hashlib
+        import pyarrow as pa
 
-            import pyarrow as pa
-
-            for batch in batches:
-                texts = batch.column(1).to_pylist()
-                keep = []
-                sigs = []
-                for i, t in enumerate(texts):
-                    if t is None:
-                        continue
-                    words = t.split(" ")
-                    if len(words) < n:
-                        continue  # empty shingle set -> no signature row
-                    sh = {
-                        " ".join(words[j : j + n])
-                        for j in range(len(words) - n + 1)
-                    }
-                    h = np.fromiter(
-                        (
-                            int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-                            for s in sh
-                        ),
-                        dtype=np.int64,
-                        count=len(sh),
-                    )
-                    sigs.append(
-                        ((h[:, None] * A[None, :] + B[None, :]) % _MERSENNE)
-                        .min(axis=0)
-                    )
-                    keep.append(i)
-                if not keep:
+        for batch in batches:
+            texts = batch.column(1).to_pylist()
+            keep = []
+            sigs = []
+            for i, t in enumerate(texts):
+                if t is None:
                     continue
-                flat = np.concatenate(sigs)
-                off = np.arange(0, (len(keep) + 1) * len(A), len(A), dtype=np.int32)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column(0).take(pa.array(keep, type=pa.int32())),
-                        pa.ListArray.from_arrays(
-                            pa.array(off), pa.array(flat, type=pa.int64())
-                        ),
-                    ],
-                    names=["id", "signature"],
+                words = t.split(" ")
+                if len(words) < n:
+                    continue  # empty shingle set -> no signature row
+                sh = {
+                    " ".join(words[j : j + n])
+                    for j in range(len(words) - n + 1)
+                }
+                h = np.fromiter(
+                    (
+                        int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+                        for s in sh
+                    ),
+                    dtype=np.int64,
+                    count=len(sh),
                 )
+                sigs.append(
+                    ((h[:, None] * A[None, :] + B[None, :]) % _MERSENNE)
+                    .min(axis=0)
+                )
+                keep.append(i)
+            if not keep:
+                continue
+            flat = np.concatenate(sigs)
+            off = np.arange(0, (len(keep) + 1) * len(A), len(A), dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(pa.array(keep, type=pa.int32())),
+                    pa.ListArray.from_arrays(
+                        pa.array(off), pa.array(flat, type=pa.int64())
+                    ),
+                ],
+                names=["id", "signature"],
+            )
 
-        return src.mapInArrow(fn, f"id {id_t}, signature array<long>")
-    exploded = fan_out(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles_col(tokens_col(text_col), n)).alias("sh"),
-    ).withColumn("h", shingle_hash_col(F.col("sh")))
-    mins = exploded.groupBy("id").agg(
-        *[
-            F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE)).alias(f"m{j}")
-            for j, (a, b) in enumerate(params)
-        ]
-    )
-    return mins.select(
-        "id", F.array(*[F.col(f"m{j}") for j in range(num_perm)]).alias("signature")
-    )
+    return src.mapInArrow(fn, f"id {id_t}, signature array<long>")
 
 
 def _band_rows(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
@@ -411,28 +397,12 @@ def minhash_incremental_pairs(
         F.col(id_col).alias("delta_id"), F.col(text_col).alias("t_d")
     )
     joined = candidates.join(t_d, "delta_id").join(t_c, "corpus_id")
-    if _assign_impl() != "sql":
-        return _pair_jaccard_verify(
-            joined.select("delta_id", "corpus_id", "t_d", "t_c"),
-            n,
-            "delta_id",
-            "corpus_id",
-        ).filter(F.col("jaccard") >= threshold)
-    return (
-        joined
-        .select(
-            "delta_id",
-            "corpus_id",
-            round_half_up(
-                jaccard_cols(
-                    shingles_col(tokens_col("t_d"), n),
-                    shingles_col(tokens_col("t_c"), n),
-                ),
-                4,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _pair_jaccard_verify(
+        joined.select("delta_id", "corpus_id", "t_d", "t_c"),
+        n,
+        "delta_id",
+        "corpus_id",
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def doc_signature_store(
@@ -511,31 +481,16 @@ def minhash_pairs_from_store(
         F.col("id").alias("corpus_id"), F.col("shingles").alias("sh_c")
     )
     joined = candidates.join(t_d, "delta_id").join(sh_c, "corpus_id")
-    if _assign_impl() != "sql":
-        # delta side tokenizes in-kernel; the corpus side is the STORED
-        # distinct shingle array (set semantics — jaccard_cols is
-        # distinct-set either way, so the value is identical)
-        return _pair_jaccard_verify(
-            joined.select("delta_id", "corpus_id", "t_d", "sh_c"),
-            n,
-            "delta_id",
-            "corpus_id",
-            b_kind="set",
-        ).filter(F.col("jaccard") >= threshold)
-    return (
-        joined
-        .select(
-            "delta_id",
-            "corpus_id",
-            round_half_up(
-                jaccard_cols(
-                    shingles_col(tokens_col("t_d"), n), F.col("sh_c")
-                ),
-                4,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    # delta side tokenizes in-kernel; the corpus side is the STORED
+    # distinct shingle array (set semantics — jaccard_cols is distinct-set
+    # either way, so the value is identical)
+    return _pair_jaccard_verify(
+        joined.select("delta_id", "corpus_id", "t_d", "sh_c"),
+        n,
+        "delta_id",
+        "corpus_id",
+        b_kind="set",
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_near_dup_pairs(
@@ -585,33 +540,16 @@ def minhash_near_dup_pairs(
     joined = candidates.join(
         txt.withColumnsRenamed({"id": "doc_id_a", "t": "t_a"}), "doc_id_a"
     ).join(txt.withColumnsRenamed({"id": "doc_id_b", "t": "t_b"}), "doc_id_b")
-    if _assign_impl() != "sql":
-        # per-pair tokenize+shingle+set-op fold -> one Arrow map stage
-        # with per-batch doc memoization (guide §4.2; bit-exact contract
-        # in _pair_jaccard_verify). SEMANTIC_ASSIGN_IMPL=sql keeps the
-        # original expression plan as the bit-equality reference.
-        return _pair_jaccard_verify(
-            joined.select("doc_id_a", "doc_id_b", "t_a", "t_b"),
-            n,
-            "doc_id_a",
-            "doc_id_b",
-        ).filter(F.col("jaccard") >= threshold)
-    verified = (
-        joined
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            round_half_up(
-                jaccard_cols(
-                    shingles_col(tokens_col("t_a"), n),
-                    shingles_col(tokens_col("t_b"), n),
-                ),
-                4,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified
+    # per-pair tokenize+shingle+set-op fold -> one Arrow map stage with
+    # per-batch doc memoization (guide §4.2; bit-exact contract in
+    # _pair_jaccard_verify; the expression plan it replaces is the
+    # bit-equality reference in tests/sql_reference.py)
+    return _pair_jaccard_verify(
+        joined.select("doc_id_a", "doc_id_b", "t_a", "t_b"),
+        n,
+        "doc_id_a",
+        "doc_id_b",
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def brute_force_topk(
@@ -1041,53 +979,24 @@ def mutual_knn_ivf(
         raw = embeddings.select(
             F.col(id_col).alias("id"), to_double_array(vec_col).alias("v")
         )
-        if _assign_impl() != "sql":
-            # ONE fused map stage builds the whole tagged frame: the
-            # frozen quantizer lands on the driver (the Lloyd loop's
-            # centroid-table-bounded collects) and the kernel emits the
-            # member row (assignment cell) plus the nprobe prober rows
-            # per vector — no broadcast crossJoin of n x k candidate
-            # rows, no rank window's exchange+sort over them, and no
-            # assignment re-join (guide §2.4/§4.2; probe order contract
-            # in _make_probe_tag_fn). SEMANTIC_ASSIGN_IMPL=sql keeps the
-            # original window plan as the bit-equality reference.
-            vecs = raw.select(F.lit(0).alias("grp"), "id", "v")
-            cent_map, hier_plans = _lloyd_cent_map(
-                vecs, kq, iters, scale=6, single_group=True, route=route
-            )
-            id_t = raw.schema["id"].dataType.simpleString()
-            tagged = raw.mapInArrow(
-                _make_probe_tag_fn(cent_map, hier_plans, nprobe),
-                f"id {id_t}, v array<double>, cell int, role int",
-            ).localCheckpoint(eager=False)
-            return _mutual_from_tagged(tagged, k, threshold, block_cap)
-        assigned, km_cents = kmeans_with_centroids(
-            embeddings, k=kq, iters=iters, id_col=id_col, vec_col=vec_col,
-            route=route,
+        # ONE fused map stage builds the whole tagged frame: the frozen
+        # quantizer lands on the driver (the Lloyd loop's
+        # centroid-table-bounded collects) and the kernel emits the member
+        # row (assignment cell) plus the nprobe prober rows per vector —
+        # no broadcast crossJoin of n x k candidate rows, no rank window's
+        # exchange+sort over them, and no assignment re-join (guide
+        # §2.4/§4.2; probe order contract in _make_probe_tag_fn; the
+        # window plan it replaces is the bit-equality reference in
+        # tests/sql_reference.py)
+        vecs = raw.select(F.lit(0).alias("grp"), "id", "v")
+        cent_map, hier_plans = _lloyd_cent_map(
+            vecs, kq, iters, scale=6, single_group=True, route=route
         )
-        # members carry their assignment cell; probes need only (id, v) —
-        # keep the assignment join off the probe branch's lineage
-        e = raw.join(
-            assigned.select("id", F.col("cluster").alias("own_cell")), "id"
-        )
-        probe_w = Window.partitionBy("id").orderBy("fx", F.col("cell"))
-        probes = (
-            raw
-            .crossJoin(
-                F.broadcast(
-                    km_cents.select(F.col("cluster").alias("cell"), "c")
-                )
-            )
-            .select(
-                "id",
-                "v",
-                "cell",
-                _fx_sq_dist(F.col("v"), F.col("c"), None).alias("fx"),
-            )
-            .withColumn("pr", F.row_number().over(probe_w))
-            .filter(F.col("pr") <= nprobe)
-            .select("id", "v", "cell")
-        )
+        id_t = raw.schema["id"].dataType.simpleString()
+        tagged = raw.mapInArrow(
+            _make_probe_tag_fn(cent_map, hier_plans, nprobe),
+            f"id {id_t}, v array<double>, cell int, role int",
+        ).localCheckpoint(eager=False)
     else:
         cents = label_centroids(embeddings, None, cell_col, vec_col)
         e = embeddings.select(
@@ -1113,30 +1022,22 @@ def mutual_knn_ivf(
             .filter(F.col("pr") <= nprobe)
             .select("id", "v", "cell")
         )
-    # Score candidates with a PER-TILE GEMM (applyInPandas), not a
-    # per-pair column expression: each tile's (probers x members) dot
-    # products run as one BLAS matmul — identical rounding/threshold to
-    # cosine_pairs_blocked, and the same reason that kernel exists (a
-    # corpus-sized candidate frame through an interpreted 64-dim cosine
-    # expression is ~10x slower than the matmul at fixture scale and
-    # worse at 100 TB). Probers and members union into one cell-keyed
-    # shuffle; roles split inside the kernel; _tile_cell_blocks caps
-    # any skewed cell at block_cap rows per role per task. tagged feeds
-    # both the tiler's count aggregate and the scoring shuffle, so it
-    # is materialized once (lazy localCheckpoint folded into the first
-    # job) instead of re-running the probe window per consumer.
-    tagged = (
-        probes.select("id", "v", "cell", F.lit(0).alias("role"))
-        .unionByName(
-            e.select(
-                "id",
-                "v",
-                F.col("own_cell").alias("cell"),
-                F.lit(1).alias("role"),
+        # tagged feeds both the tiler's count aggregate and the scoring
+        # shuffle, so it is materialized once (lazy localCheckpoint folded
+        # into the first job) instead of re-running the probe window per
+        # consumer
+        tagged = (
+            probes.select("id", "v", "cell", F.lit(0).alias("role"))
+            .unionByName(
+                e.select(
+                    "id",
+                    "v",
+                    F.col("own_cell").alias("cell"),
+                    F.lit(1).alias("role"),
+                )
             )
+            .localCheckpoint(eager=False)
         )
-        .localCheckpoint(eager=False)
-    )
     return _mutual_from_tagged(tagged, k, threshold, block_cap)
 
 
@@ -1144,9 +1045,20 @@ def _mutual_from_tagged(
     tagged: DataFrame, k: int, threshold: float, block_cap: int
 ) -> DataFrame:
     """The scoring + mutuality tail of ``mutual_knn_ivf``, shared by the
-    window-plan and fused-kernel tagged-frame builders: per-tile GEMM,
-    per-source rank window, reciprocal-top-k join (contract in
-    ``mutual_knn_ivf``'s docstring)."""
+    label-celled window plan and the fused k-means kernel that build its
+    tagged (id, v, cell, role) frame: per-tile GEMM, per-source rank
+    window, reciprocal-top-k join (contract in ``mutual_knn_ivf``'s
+    docstring).
+
+    Scores candidates with a PER-TILE GEMM (applyInPandas), not a
+    per-pair column expression: each tile's (probers x members) dot
+    products run as one BLAS matmul — identical rounding/threshold to
+    cosine_pairs_blocked, and the same reason that kernel exists (a
+    corpus-sized candidate frame through an interpreted 64-dim cosine
+    expression is ~10x slower than the matmul at fixture scale and worse
+    at 100 TB). Probers and members share one cell-keyed shuffle; roles
+    split inside the kernel; _tile_cell_blocks caps any skewed cell at
+    block_cap rows per role per task."""
     import numpy as np
     import pandas as pd
 
@@ -1346,28 +1258,12 @@ def kmeans_lite(
     ).select("id", "cluster", "dist_fx", "dist")
 
 
-def _fx_sq_dist(v, c, dim: int | None):
+def _fx_sq_dist(v, c):
     """EXACT int64 fixed-point squared distance between two array<double>
-    columns: sum of floor((v_d - c_d)^2 * 1e8 + 0.5). With ``dim`` known
-    the sum unrolls into a flat codegen'd chain — int64 addition is
-    associative, so unrolled and folded values are identical to the bit;
-    without it, the original zip_with/aggregate fold runs (interpreted)."""
-    if dim is not None:
-        from etl_pipeline_challenge_aladia_spark.functions.vectors import (
-            _chain_sum,
-        )
-
-        return _chain_sum(
-            [
-                F.floor(
-                    (v.getItem(d) - c.getItem(d))
-                    * (v.getItem(d) - c.getItem(d))
-                    * F.lit(100000000.0)
-                    + F.lit(0.5)
-                ).cast("long")
-                for d in range(dim)
-            ]
-        )
+    columns: sum of floor((v_d - c_d)^2 * 1e8 + 0.5), as a zip_with /
+    aggregate fold. int64 addition is associative, so any summation order
+    gives the same value to the bit — the NumPy twin
+    (``argmin_kernel.fx_sq_dists``) relies on that."""
     sq = F.zip_with(
         v,
         c,
@@ -1380,17 +1276,15 @@ def _fx_sq_dist(v, c, dim: int | None):
 
 def kmeans_lite_grouped(
     vecs: DataFrame, k: int = 8, iters: int = 3, scale: int = 6,
-    dim: int | None = None, single_group: bool = False,
-    route: str = "flat",
+    single_group: bool = False, route: str = "flat",
 ) -> DataFrame:
     """Lloyd's k-means over MANY groups at once: ``vecs`` is (grp, id, v)
     and every group trains its own independent k centroids, but all groups
-    share each round's jobs — one broadcast join, one argmin window, one
-    (grp, cluster, dim) aggregation, one lineage checkpoint PER ROUND,
-    regardless of group count. This is what lets product quantization train
-    ``blocks`` codebooks for the price of one k-means, and at 100 TB it is
-    the difference between ``blocks`` passes over the corpus per round and
-    a single pass.
+    share each round's jobs — one partial-sums map stage and one
+    centroid-table-bounded aggregate PER ROUND, regardless of group count.
+    This is what lets product quantization train ``blocks`` codebooks for
+    the price of one k-means, and at 100 TB it is the difference between
+    ``blocks`` passes over the corpus per round and a single pass.
 
     Per-group semantics are identical to the single-group ``kmeans_lite``
     (the oracle unrolls per group unchanged): init = the k lowest-id
@@ -1399,7 +1293,7 @@ def kmeans_lite_grouped(
     the order-independent fixed-point mean, rounded half-up.
     """
     assigned, _ = _kmeans_rounds(
-        vecs, k, iters, scale, dim, single_group=single_group, route=route
+        vecs, k, iters, scale, single_group=single_group, route=route
     )
     # dist_fx is the EXACT int64 fixed-point squared distance (1e-8 quanta)
     # — consumers needing exact integer aggregation use it directly instead
@@ -1412,135 +1306,6 @@ def kmeans_lite_grouped(
         "dist_fx",
         (F.col("dist_fx").cast("double") / F.lit(100000000.0)).alias("dist"),
     )
-
-
-def _argmin_assign(
-    vecs: DataFrame, centroids: DataFrame, dim: int | None
-) -> DataFrame:
-    """Broadcast-join candidates + hash-aggregate argmin:
-    ``min(struct(dist_fx, cluster))`` is lexicographic — minimum exact
-    fixed-point distance, ties to the lower cluster index — the same
-    contract as a (dist_fx, cluster)-ordered row_number window, but as a
-    HASH AGGREGATE instead of a window SORT: the k candidate rows for
-    each id sit in the exploding partition, so map-side partial
-    aggregation collapses them locally and the exchange moves ~n rows,
-    not n x k — at auto-k (k ~ sqrt n) the difference between a
-    linear-in-corpus shuffle and an n^1.5 one. Distances stay codegen'd
-    expressions (a packed-array fold argmin was measured 25-40% slower
-    here: higher-order lambdas are interpreted per element).
-    ``any_value(v)`` is deterministic-by-value: every candidate row of a
-    group carries the identical source vector."""
-    dist_fx = _fx_sq_dist(F.col("v"), F.col("c"), dim)
-    return (
-        vecs.join(F.broadcast(centroids), "grp")
-        .select("grp", "id", "v", "cluster", dist_fx.alias("dist_fx"))
-        .groupBy("grp", "id")
-        .agg(
-            F.min(F.struct("dist_fx", "cluster")).alias("_m"),
-            F.any_value("v").alias("v"),
-        )
-        .select(
-            "grp",
-            "id",
-            "v",
-            F.col("_m.cluster").alias("cluster"),
-            F.col("_m.dist_fx").alias("dist_fx"),
-        )
-    )
-
-
-def _argmin_assign_hier(
-    vecs: DataFrame,
-    centroids: DataFrame,
-    dim: int | None,
-    k2: int,
-    inner_iters: int = 2,
-    scale: int = 6,
-) -> DataFrame:
-    """Two-level routed argmin — the IVF-of-IVF assignment layout for
-    large k. Flat ``_argmin_assign`` evaluates n x k distances; at
-    auto-k (k ~ sqrt n) that is Θ(n^1.5) compute. Here the centroid
-    table itself is clustered into ``k2`` super-cells by a tiny inner
-    k-means (k rows — negligible at any corpus scale), each vector
-    routes to its nearest NON-EMPTY super-cell (n x k2 distances), and
-    the exact argmin runs only against that super-cell's member
-    centroids (~n x k/k2): with k2 = ceil(sqrt(k)) total distance work
-    is ~2*n*sqrt(k) per round instead of n*k — at 10^9+ vectors the
-    difference between a pass and a day.
-
-    Deterministic end to end — the inner k-means reuses the exact
-    fixed-point ``_kmeans_rounds`` contract (lowest-id init, int64
-    distances, half-up centroid rounding, index tie-breaks), routing
-    and member argmin reuse ``min(struct(dist_fx, idx))`` — so a SQL
-    oracle unrolls BOTH levels and matches bit-for-bit. Assignment is
-    approximate by design (the nearest centroid can live outside the
-    routed super-cell — the standard IVF trade); the flat path remains
-    the exact twin.
-
-    Empty super-cells (an inner Lloyd cluster that lost all member
-    centroids) are excluded from routing, so every routed vector finds
-    at least one member candidate."""
-    cvecs = centroids.select(
-        "grp", F.col("cluster").alias("id"), F.col("c").alias("v")
-    )
-    member, supercents = _kmeans_rounds(
-        cvecs, k2, inner_iters, scale, dim, single_group=True
-    )
-    # member: (id = centroid's cluster index, cluster = its super-cell)
-    member_map = member.select(
-        F.col("id").alias("cluster"), F.col("cluster").alias("supercell")
-    ).localCheckpoint(eager=True)
-    nonempty = (
-        supercents.select(
-            "grp", F.col("cluster").alias("supercell"), F.col("c").alias("sc")
-        )
-        .join(member_map.select("supercell").distinct(), "supercell")
-        .select(
-            "grp", F.col("supercell").alias("cluster"), F.col("sc").alias("c")
-        )
-    )
-    routed = _argmin_assign(vecs, nonempty, dim).select(
-        "grp", "id", "v", F.col("cluster").alias("supercell")
-    )
-    cmem = centroids.join(member_map, "cluster").select(
-        "grp", "supercell", "cluster", "c"
-    )
-    dist_fx = _fx_sq_dist(F.col("v"), F.col("c"), dim)
-    return (
-        # broadcast hash join keyed on (grp, supercell): each vector row
-        # probes only its super-cell's member centroids, so the distance
-        # expression runs ~k/k2 times per vector, not k
-        routed.join(F.broadcast(cmem), ["grp", "supercell"])
-        .select("grp", "id", "v", "cluster", dist_fx.alias("dist_fx"))
-        .groupBy("grp", "id")
-        .agg(
-            F.min(F.struct("dist_fx", "cluster")).alias("_m"),
-            F.any_value("v").alias("v"),
-        )
-        .select(
-            "grp",
-            "id",
-            "v",
-            F.col("_m.cluster").alias("cluster"),
-            F.col("_m.dist_fx").alias("dist_fx"),
-        )
-    )
-
-
-#: Physical implementation of the fixed-point argmin assignment:
-#: "arrow" (default) = the NumPy map-only kernel over Arrow batches
-#: (guide §4.2 — vectorized native arithmetic; no candidate-row join,
-#: no sort, no exchange in the assignment stage); "sql" = the original
-#: broadcast-join + aggregate expression plan, kept as the bit-equality
-#: reference and fallback. Both produce IDENTICAL rows (the kernel
-#: reproduces every IEEE op — functions/argmin_kernel.py's exactness
-#: contract; tests/test_assign_kernel_parity.py pins arrow == sql), so
-#: the SQL oracles are untouched by the switch.
-ASSIGN_IMPL_ENV = "SEMANTIC_ASSIGN_IMPL"
-
-
-def _assign_impl() -> str:
-    return os.environ.get(ASSIGN_IMPL_ENV, "arrow")
 
 
 def _make_assign_fn(cent_map: dict, hier_plans: dict | None):
@@ -1655,8 +1420,8 @@ def _make_probe_tag_fn(cent_map: dict, hier_plans: dict | None, nprobe: int):
                 own, _ = _K.hier_argmin(V, hier_plans[0])
             else:
                 own, _ = _K.argmin_cells(V, ids_c, C)
-            # flat probe ranking over ALL cells (the SQL plan ranks the
-            # full centroid table even under hier assignment): stable
+            # flat probe ranking over ALL cells (probes rank the full
+            # centroid table even under hier assignment): stable
             # argsort of the exact fx row = (fx asc, cell-id asc) since
             # centroid rows are sorted ascending by id
             k = max(1, C.shape[0])
@@ -1746,12 +1511,25 @@ def _make_partials_fn(cent_map: dict, hier_plans: dict | None):
 
 
 def _hier_plans(cent_map: dict, k2: int, scale: int) -> dict:
-    """Two-level routing tables per group, precomputed on the DRIVER from
-    the collected centroid table: the inner quantizer of
-    ``_argmin_assign_hier`` runs over k rows — metadata-sized at any
-    corpus scale, so clustering it locally replaces the 3 scheduled
-    inner-k-means jobs per outer round with microseconds (the same
-    rationale as the union-find small-graph gate in operators/dedup.py)."""
+    """Two-level routing tables per group — the IVF-of-IVF assignment
+    layout for large k. Flat assignment evaluates n x k distances; at
+    auto-k (k ~ sqrt n) that is Θ(n^1.5) compute. Here the centroid table
+    itself is clustered into ``k2`` super-cells by a tiny inner k-means
+    (the same fixed-point contract: lowest-id init, int64 distances,
+    half-up centroid rounding, index tie-breaks), each vector routes to
+    its nearest NON-EMPTY super-cell (n x k2 distances) and the exact
+    argmin runs only against that super-cell's member centroids (~n x
+    k/k2) — ~2*n*sqrt(k) distance work per round with k2 = ceil(sqrt(k)).
+    Assignment is approximate by design (the nearest centroid can live
+    outside the routed super-cell — the standard IVF trade); flat routing
+    remains the exact variant. Deterministic at both levels, so a SQL
+    oracle unrolls both and matches bit-for-bit.
+
+    The inner quantizer runs over k rows — metadata-sized at any corpus
+    scale — so it is built on the DRIVER from the collected centroid
+    table (``argmin_kernel.build_hier_plan``), not as scheduled jobs (the
+    same rationale as the union-find small-graph gate in
+    operators/dedup.py)."""
     return {
         g: _K.build_hier_plan(ids, C, k2, scale=scale)
         for g, (ids, C) in cent_map.items()
@@ -1785,13 +1563,14 @@ def _cent_map_from_partials(agg_rows, scale: int) -> dict:
     return out
 
 
-def _centroids_df(spark, cent_map: dict, grp_type) -> DataFrame:
+def _centroids_df(spark, cent_map: dict, grp_type=None) -> DataFrame:
     """Rebuild the (grp, cluster, c) centroid DataFrame from the local
-    map — same schema the SQL path's checkpointed table had, so every
-    downstream consumer (stores, drift audits, frozen-index saves) is
-    untouched."""
+    map — the table downstream consumers (stores, drift audits,
+    frozen-index saves) read. ``grp_type`` defaults to the int of the
+    single-group ``lit(0)``."""
     from pyspark.sql import types as T
 
+    grp_type = grp_type or T.IntegerType()
     rows = []
     for g in sorted(cent_map):
         ids, C = cent_map[g]
@@ -1807,47 +1586,59 @@ def _centroids_df(spark, cent_map: dict, grp_type) -> DataFrame:
     return spark.createDataFrame(rows, schema=schema)
 
 
-def _kmeans_rounds(
-    vecs: DataFrame, k: int, iters: int, scale: int, dim: int | None,
-    single_group: bool = False,
-    route: str = "flat",
-) -> tuple[DataFrame, DataFrame]:
-    """Dispatcher: the Arrow/NumPy assignment kernel by default, the
-    original all-expression SQL plan under ``SEMANTIC_ASSIGN_IMPL=sql``
-    (bit-equality reference; identical output rows either way)."""
-    if _assign_impl() == "sql":
-        return _kmeans_rounds_sql(
-            vecs, k, iters, scale, dim, single_group=single_group, route=route
-        )
-    return _kmeans_rounds_arrow(
-        vecs, k, iters, scale, single_group=single_group, route=route
+def _trained_cells(
+    frame: DataFrame, k: int, iters: int, route: str, id_col: str,
+    vec_col: str,
+) -> tuple[dict, DataFrame]:
+    """Train the single-group fixed-point k-means on ``frame`` and assign
+    it in the same kernel that ECHOES the vector: (frozen cent_map,
+    cells (id, cluster, v array<double>)). Consumers of (id, cluster, v)
+    need no join back to ``frame`` for the vector."""
+    vecs = frame.select(
+        F.lit(0).alias("grp"),
+        F.col(id_col).alias("id"),
+        to_double_array(vec_col).alias("v"),
     )
+    cent_map, hier_plans = _lloyd_cent_map(
+        vecs, k, iters, scale=6, single_group=True, route=route
+    )
+    id_t = vecs.schema["id"].dataType.simpleString()
+    cells = vecs.mapInArrow(
+        _make_assign_v_fn(cent_map, hier_plans),
+        f"id {id_t}, cluster int, v array<double>",
+    )
+    return cent_map, cells
 
 
-def _kmeans_rounds_arrow(
+def _kmeans_rounds(
     vecs: DataFrame, k: int, iters: int, scale: int,
     single_group: bool = False,
     route: str = "flat",
 ) -> tuple[DataFrame, DataFrame]:
-    """Lloyd's loop with the map-only assignment kernel (guide §4.2):
+    """The shared Lloyd's loop: returns (final assignment (grp, id,
+    cluster, dist_fx), the CENTROID table (grp, cluster, c) that final
+    assignment was computed against). Centroids are not recomputed after
+    the last assignment, so the returned table is exactly the one every
+    ``dist_fx`` refers to — the frozen coarse quantizer a streaming
+    ingest assigns new vectors against (``assign_to_centroids``).
+
+    Runs on the map-only assignment kernel (guide §4.2):
 
     - init and each recompute land the k x dim centroid table on the
-      DRIVER (bounded: k ~ sqrt(n) rows of metadata — the table the SQL
-      path materialized via localCheckpoint anyway), and ship it back
+      DRIVER (bounded: k ~ sqrt(n) rows of metadata) and ship it back
       inside the kernel closure — no broadcast-join stage at all;
     - recompute rounds emit per-batch partial sums (<= k x dim rows per
       batch) instead of n assignment rows: ONE job per round whose
       exchange carries centroid-table bytes, never corpus bytes;
     - the final assignment is a single map-only stage fused into the
       consumer's plan — no candidate-row join, no SortAggregate, no
-      exchange (the SQL plan paid all three per round).
+      exchange.
 
-    Semantics identical to ``_kmeans_rounds_sql`` bit-for-bit: the kernel
-    reproduces every IEEE op (functions/argmin_kernel.py), init/ties/
-    empty-cluster behavior included. ``route="hier"`` runs the SAME
-    two-level routed assignment; its inner quantizer (over k centroid
-    rows) runs locally on the driver instead of as 3 scheduled jobs per
-    round."""
+    The kernel reproduces every IEEE op of the broadcast-join + argmin
+    expression plan (functions/argmin_kernel.py), init/ties/empty-cluster
+    behavior included; tests/sql_reference.py keeps that plan as the
+    bit-equality reference. ``route="hier"`` runs the two-level routed
+    assignment (``_hier_plans``)."""
     cent_map, hier_plans = _lloyd_cent_map(
         vecs, k, iters, scale, single_group=single_group, route=route
     )
@@ -1868,7 +1659,7 @@ def _lloyd_cent_map(
     single_group: bool = False,
     route: str = "flat",
 ) -> tuple[dict, dict | None]:
-    """The driver-side Lloyd loop of ``_kmeans_rounds_arrow``: run the
+    """The driver-side Lloyd loop of ``_kmeans_rounds``: run the
     ``iters - 1`` recompute rounds (one partial-sums job + a
     centroid-table-bounded collect per round) and return the FROZEN
     quantizer the final assignment round would use —
@@ -1884,8 +1675,7 @@ def _lloyd_cent_map(
     grp_type = vecs.schema["grp"].dataType
     if single_group:
         # k-row bounded init fetch (the k lowest-id vectors, already
-        # sorted by the TakeOrdered): same contract as the SQL path's
-        # checkpointed init table, landed locally for the kernel closure
+        # sorted by the TakeOrdered), landed locally for the kernel closure
         init_rows = vecs.orderBy("id").limit(k).collect()
     else:
         w_init = Window.partitionBy("grp").orderBy("id")
@@ -1924,89 +1714,6 @@ def _lloyd_cent_map(
     return cent_map, hier_plans
 
 
-def _kmeans_rounds_sql(
-    vecs: DataFrame, k: int, iters: int, scale: int, dim: int | None,
-    single_group: bool = False,
-    route: str = "flat",
-) -> tuple[DataFrame, DataFrame]:
-    """The shared Lloyd's loop: returns (final assignment, the CENTROID
-    table that final assignment was computed against). Centroids are NOT
-    recomputed after the last assignment — that recompute was a dead
-    aggregation + eager checkpoint job per call (the SQL oracle never had
-    a c{iters} CTE), and skipping it keeps the returned centroids exactly
-    the ones every ``dist_fx`` refers to — the frozen coarse quantizer a
-    streaming ingest assigns new vectors against (``assign_to_centroids``).
-
-    Assignment is a broadcast join + hash-aggregate argmin
-    (``_argmin_assign``): map-side combine keeps the exchange linear in
-    the corpus regardless of k. ``route="hier"`` (single-group only)
-    swaps every round's assignment for the two-level routed
-    ``_argmin_assign_hier`` with k2 = ceil(sqrt(k)) super-cells —
-    ~2*n*sqrt(k) distance evaluations per round instead of n*k, the
-    right shape once auto-k makes k ~ sqrt(n)."""
-    if route == "hier" and not single_group:
-        raise ValueError("hier routing is single-group only")
-    if single_group:
-        # init = the k lowest-id vectors, cluster = rank by id — same
-        # contract as the window path below, but TakeOrderedAndProject +
-        # a k-row bounded collect_list instead of a WindowExec: with grp
-        # a folded constant the window's partition spec is empty and
-        # WindowExec logs a false "serious performance degradation"
-        # scale alarm (the plan was already rewritten to a k-row limit;
-        # this path just removes the operator that prints it)
-        centroids = (
-            vecs.orderBy("id")
-            .limit(k)
-            .groupBy("grp")
-            .agg(F.array_sort(F.collect_list(F.struct("id", "v"))).alias("_top"))
-            .select("grp", F.posexplode("_top").alias("_i", "_s"))
-            .select(
-                "grp",
-                (F.col("_i") + 1).cast("int").alias("cluster"),
-                F.col("_s.v").alias("c"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    else:
-        w_init = Window.partitionBy("grp").orderBy("id")
-        centroids = (
-            vecs.withColumn("_rn", F.row_number().over(w_init))
-            .filter(F.col("_rn") <= k)
-            .select("grp", F.col("_rn").alias("cluster"), F.col("v").alias("c"))
-            .localCheckpoint(eager=True)
-        )
-    import math
-
-    k2 = int(math.ceil(math.sqrt(k)))  # fixed across rounds (oracle mirrors)
-    assigned = None
-    for r in range(iters):
-        # fixed-point per-dimension squared diffs (1e-8 quanta, int64): the
-        # distance sum is exact integer arithmetic, so argmin assignment is
-        # engine-reproducible and an unrolled SQL twin matches bit-for-bit
-        # (dim=None -> fold; see _fx_sq_dist for the unrolled variant)
-        if route == "hier":
-            assigned = _argmin_assign_hier(vecs, centroids, dim, k2, scale=scale)
-        else:
-            assigned = _argmin_assign(vecs, centroids, dim)
-        if r < iters - 1:
-            centroids = (
-                assigned.select(
-                    "grp", "cluster", F.posexplode("v").alias("dim", "val")
-                )
-                .groupBy("grp", "cluster", "dim")
-                .agg(round_half_up(avg_fixed_point(F.col("val")), scale).alias("cv"))
-                .groupBy("grp", "cluster")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "cv"))),
-                        lambda x: x["cv"],
-                    ).alias("c")
-                )
-                .localCheckpoint(eager=True)
-            )
-    return assigned, centroids
-
-
 def kmeans_with_centroids(
     embeddings: DataFrame,
     k: int = 8,
@@ -2027,7 +1734,7 @@ def kmeans_with_centroids(
         to_double_array(vec_col).alias("v"),
     )
     assigned, centroids = _kmeans_rounds(
-        vecs, k, iters, scale, None, single_group=True, route=route
+        vecs, k, iters, scale, single_group=True, route=route
     )
     return (
         assigned.select(
@@ -2040,50 +1747,59 @@ def kmeans_with_centroids(
     )
 
 
+def _route_to_frozen(
+    v: DataFrame, centroids: DataFrame, echo_v: bool = False
+) -> DataFrame:
+    """Route (grp = 0, id, v) rows onto a FROZEN (cluster, c) centroid
+    table with the map-only argmin kernel: the k x dim table (tiny at any
+    corpus scale — it is the frozen quantizer a store hands back) lands on
+    the driver once and ships in the kernel closure, so routing pays ONE
+    map stage. Emits (grp, id, cluster, dist_fx), or (id, cluster, v)
+    with ``echo_v``. An empty table has no cell to route to: zero rows."""
+    import numpy as np
+
+    rows = centroids.select("cluster", "c").collect()  # k-row frozen quantizer table
+    rows.sort(key=lambda r: r["cluster"])
+    if not rows:
+        v = v.limit(0)  # no cell to route to
+    cent_map = {
+        0: (
+            np.array([r["cluster"] for r in rows], dtype=np.int64),
+            np.array([r["c"] for r in rows], dtype=np.float64),
+        )
+    }
+    id_t = v.schema["id"].dataType.simpleString()
+    if echo_v:
+        return v.mapInArrow(
+            _make_assign_v_fn(cent_map, None),
+            f"id {id_t}, cluster int, v array<double>",
+        )
+    return v.mapInArrow(
+        _make_assign_fn(cent_map, None),
+        f"grp int, id {id_t}, cluster int, dist_fx long",
+    )
+
+
 def assign_to_centroids(
     vecs: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Route vectors to their nearest FROZEN centroid — the
-    per-micro-batch ingest primitive of an IVF/SemDeDup layout. Default
-    implementation is the map-only Arrow/NumPy argmin kernel: the k x dim
-    centroid table (tiny at any corpus scale — it is the frozen quantizer
-    a store hands back) lands on the driver once and ships in the kernel
-    closure, so the batch pays ONE map stage — no broadcast-join, no
-    candidate rows, no exchange. ``SEMANTIC_ASSIGN_IMPL=sql`` keeps the
-    original broadcast-join + aggregate argmin as the bit-equality
-    reference. Same exact fixed-point distance + lower-cluster tie-break
-    contract either way, so an unrolled SQL oracle reproduces it
-    bit-for-bit."""
+    per-micro-batch ingest primitive of an IVF/SemDeDup layout: one map
+    stage (``_route_to_frozen``) — no broadcast-join, no candidate rows,
+    no exchange. Exact fixed-point distance + lower-cluster tie-break, so
+    an unrolled SQL oracle reproduces it bit-for-bit (the broadcast-join
+    + aggregate argmin it replaces is the reference in
+    tests/sql_reference.py)."""
     v = vecs.select(
         F.lit(0).alias("grp"),
         F.col(id_col).alias("id"),
         to_double_array(vec_col).alias("v"),
     )
-    if _assign_impl() == "sql":
-        cents = centroids.select(F.lit(0).alias("grp"), "cluster", "c")
-        assigned = _argmin_assign(v, cents, dim)
-    else:
-        import numpy as np
-
-        rows = centroids.select("cluster", "c").collect()  # k-row frozen quantizer table
-        rows.sort(key=lambda r: r["cluster"])
-        cent_map = {
-            0: (
-                np.array([r["cluster"] for r in rows], dtype=np.int64),
-                np.array([r["c"] for r in rows], dtype=np.float64),
-            )
-        }
-        assigned = v.mapInArrow(
-            _make_assign_fn(cent_map, None),
-            f"grp int, id {v.schema['id'].dataType.simpleString()},"
-            " cluster int, dist_fx long",
-        )
     return (
-        assigned
+        _route_to_frozen(v, centroids)
         .select("id", "cluster", "dist_fx")
         .withColumn(
             "dist", F.col("dist_fx").cast("double") / F.lit(100000000.0)
@@ -2764,8 +2480,6 @@ def deployment_route_threshold(spark) -> int | None:
     when no store is configured (``SEMANTIC_ROUTE_STORE`` unset) or the
     configured store has no persisted decision yet — callers fall back
     to ``SEMANTIC_ROUTE_THRESHOLD`` in both cases."""
-    import os
-
     path = os.environ.get(SEMANTIC_ROUTE_STORE_ENV)
     if not path:
         return None
@@ -2804,18 +2518,18 @@ def resolve_semantic_route(
 
 
 def _cell_pair_dedup(
-    m: DataFrame, threshold: float, out_id: str = "vec_id",
+    m: DataFrame, threshold: float, dim: int, out_id: str = "vec_id",
     n_hint: int | None = None,
 ) -> DataFrame:
     """The in-cell duplicate sweep of ``semantic_dedup`` as one grouped
-    Arrow kernel over (id, cluster, v): emits (out_id, canonical_id,
-    max_cos) per duplicate. Exact-value contract lives in
-    functions/argmin_kernel.py:cell_dup_sweep.
+    Arrow kernel over (id, cluster, v) with ``dim``-wide vectors: emits
+    (out_id, canonical_id, max_cos) per duplicate. Exact-value contract
+    lives in functions/argmin_kernel.py:cell_dup_sweep.
 
     Giant-cell guard: applyInPandas materializes the WHOLE group's
     (rows x dim) input per task, so when the corpus could hold a cell
-    above ``PAIR_GROUP_ROWS`` (``n_hint`` is the corpus count — a cell
-    can never exceed it; None means unknown), oversized cells are split
+    above ``pair_group_rows(dim)`` (``n_hint`` is the corpus count — a
+    cell can never exceed it; None means unknown), oversized cells are split
     into id-rank blocks and swept as (canon-block, dup-block) tiles with
     a dup-grain (min canon, max cos) rollup — bit-identical output
     (min/max over qualifying partners decompose across any partition of
@@ -2825,7 +2539,7 @@ def _cell_pair_dedup(
 
     id_t = m.schema["id"].dataType.simpleString()
     th = float(threshold)
-    cap = _K.PAIR_GROUP_ROWS
+    cap = _K.pair_group_rows(dim)
 
     def fn(pdf):
         import numpy as np
@@ -2934,7 +2648,7 @@ def _cell_screen_pairs(
     one COGROUPED Arrow kernel: ``d`` is (cell, id, v) [delta], ``c`` is
     (cell, cid, cv) [stored corpus members]; emits (out_id, canonical_id,
     max_cos) per leaked/duplicate delta row. Cells present on only one
-    side emit nothing — inner-join semantics, like the SQL plan.
+    side emit nothing — inner-join semantics.
 
     Group-input bound: unlike the self-sweep (``_cell_pair_dedup``,
     which hard-caps oversized cells via the tiled route), the screen's
@@ -3009,16 +2723,13 @@ def semantic_dedup(
     join — decide from the data, not a pinned constant). The same formula
     is SQL-expressible, so the oracle stays exact under auto-k (dynamic
     LIMIT on the init CTE). Assignment reuses the deterministic
-    fixed-point ``kmeans_lite`` so the oracle can unroll it. The hot pair stage runs a cheap prefilter — one dot product of
-    PRE-normalized vectors per pair (cosine re-derives both norms per
-    pair, 3x the flops) with a safety margin below the threshold — and
-    only surviving pairs get the exact canonical cosine that the oracle
-    compares, so output values are untouched. Output: one row per
-    duplicate (vec_id, canonical_id = lowest qualifying cell-mate,
-    max_cos).
+    fixed-point ``kmeans_lite`` so the oracle can unroll it; the in-cell
+    pair stage computes the exact canonical cosine (half-up to 4) the
+    oracle compares. Output: one row per duplicate (vec_id, canonical_id
+    = lowest qualifying cell-mate, max_cos).
 
     ``route="hier"`` swaps every Lloyd round's flat argmin for the
-    two-level routed ``_argmin_assign_hier`` (centroids clustered into
+    two-level routed assignment (``_hier_plans``: centroids clustered into
     ceil(sqrt(k)) super-cells; ~2*n*sqrt(k) distance evaluations per
     round instead of n*k) — with auto-k that cuts total assignment from
     Θ(n^1.5) to ~Θ(n^1.25), the right shape at 10^9+ vectors; still
@@ -3034,11 +2745,6 @@ def semantic_dedup(
     scale; ``route="flat"`` stays available as the explicit exact-audit
     variant.
     """
-    from etl_pipeline_challenge_aladia_spark.functions.vectors import (
-        dot_col,
-        l2_normalize_col,
-    )
-
     n = None
     if k is None or route == "auto":
         # one cheap count (parquet footer metadata when unfiltered) buys
@@ -3050,67 +2756,21 @@ def semantic_dedup(
         route = resolve_semantic_route(
             route, n, route_threshold, spark=embeddings.sparkSession
         )
-    if _assign_impl() != "sql":
-        # in-cell sweep as ONE grouped Arrow kernel (guide §4.2): the
-        # exchange moves each member once, keyed by its cell, and the
-        # kernel computes the exact round4 cosines vectorized — no
-        # self-join, no per-pair interpreted folds, no second exchange
-        # for the dup-grain aggregate (a dup's matches all live in its
-        # own cell, so the rollup is in-kernel). The dot-product
-        # PREFILTER of the SQL plan is a conservative margin over the
-        # exact cosine, so sweeping exact cosines directly emits the
-        # identical row set — which is also precisely what the oracle's
-        # pair CTE computes. The assignment kernel ECHOES the vector
-        # (r14), so the old join back to the corpus for v is gone: the
-        # whole query is one map stage + one cell-keyed exchange.
-        vecs = embeddings.select(
-            F.lit(0).alias("grp"),
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-        )
-        cent_map, hier_plans = _lloyd_cent_map(
-            vecs, k, iters, scale=6, single_group=True, route=route
-        )
-        id_t = vecs.schema["id"].dataType.simpleString()
-        m = vecs.mapInArrow(
-            _make_assign_v_fn(cent_map, hier_plans),
-            f"id {id_t}, cluster int, v array<double>",
-        )
-        return _cell_pair_dedup(m, threshold, out_id="vec_id", n_hint=n)
-    cells = kmeans_lite(
-        embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        route=route,
-    )
-    v = embeddings.select(
-        F.col(id_col).alias("id"),
-        to_double_array(vec_col).alias("v"),
-        l2_normalize_col(to_double_array(vec_col)).alias("nv"),
-    )
-    m = cells.select("id", "cluster").join(v, "id")
-    a, b = m.alias("a"), m.alias("b")
-    # margin covers normalized-dot vs exact-cosine float noise (~1e-15) by
-    # ten orders of magnitude; candidates below it cannot reach threshold
-    prefilter = dot_col(F.col("a.nv"), F.col("b.nv")) >= F.lit(threshold - 0.01)
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col("a.id") < F.col("b.id"))
-            & prefilter,
-        )
-        .select(
-            F.col("a.id").alias("keep_id"),
-            F.col("b.id").alias("dup_id"),
-            round_half_up(
-                cosine_similarity_col(F.col("a.v"), F.col("b.v")), 4
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= F.lit(threshold))
-    )
-    return pairs.groupBy(F.col("dup_id").alias("vec_id")).agg(
-        F.min("keep_id").alias("canonical_id"),
-        F.max("cos_sim").alias("max_cos"),
-    )
+    # in-cell sweep as ONE grouped Arrow kernel (guide §4.2): the exchange
+    # moves each member once, keyed by its cell, and the kernel computes
+    # the exact round4 cosines vectorized — no self-join, no per-pair
+    # interpreted folds, no second exchange for the dup-grain aggregate (a
+    # dup's matches all live in its own cell, so the rollup is in-kernel).
+    # The dot-product prefilter of the SQL reference plan is a
+    # conservative margin over the exact cosine, so sweeping exact cosines
+    # directly emits the identical row set — which is also precisely what
+    # the oracle's pair CTE computes. The assignment kernel ECHOES the
+    # vector, so there is no join back to the corpus for v: the whole
+    # query is one map stage + one cell-keyed exchange.
+    cent_map, m = _trained_cells(embeddings, k, iters, route, id_col, vec_col)
+    # vector width for the giant-cell cap (an empty corpus has none)
+    dim = next((int(C.shape[1]) for _, C in cent_map.values()), 1)
+    return _cell_pair_dedup(m, threshold, dim, out_id="vec_id", n_hint=n)
 
 
 def semantic_dedup_screen(
@@ -3134,86 +2794,33 @@ def semantic_dedup_screen(
     ``corpus_cells`` is the stored index: (id_col, vec_col, cell_col) —
     cells were assigned by the SAME quantizer at ingest time, so no
     corpus-side recompute happens here. Same pair contract as
-    ``semantic_dedup``: pre-normalized dot prefilter with a safety
-    margin, exact canonical cosine (half-up to 4) for surviving pairs.
+    ``semantic_dedup``: exact canonical cosine (half-up to 4).
     Output: (vec_id [delta ids], canonical_id = min matching corpus id,
     max_cos). Within-batch twins are NOT screened against each other —
     they surface when the next batch screens against the appended
     corpus (the ``streaming/docs.py`` accumulation contract).
     """
-    from etl_pipeline_challenge_aladia_spark.functions.vectors import (
-        dot_col,
-        l2_normalize_col,
+    # delta-vs-corpus sweep as ONE cogrouped Arrow kernel: both sides
+    # exchange once, keyed by the cell, and the kernel computes the exact
+    # round4 cosines vectorized (same prefilter-superset argument as
+    # semantic_dedup's kernel — identical row set). The routing kernel
+    # ECHOES the delta vector, so there is no join back to the delta for
+    # v: the delta side is one map stage straight into the cogroup
+    # exchange.
+    dvec = delta.select(
+        F.lit(0).alias("grp"),
+        F.col(id_col).alias("id"),
+        to_double_array(vec_col).alias("v"),
     )
-
-    if _assign_impl() != "sql":
-        # delta-vs-corpus sweep as ONE cogrouped Arrow kernel: both sides
-        # exchange once, keyed by the cell, and the kernel computes the
-        # exact round4 cosines vectorized (same prefilter-superset
-        # argument as semantic_dedup's kernel — identical row set). The
-        # routing kernel ECHOES the delta vector (r14), so the old join
-        # back to the delta for v is gone: the delta side is one map
-        # stage straight into the cogroup exchange.
-        import numpy as np
-
-        rows = centroids.select("cluster", "c").collect()  # k-row frozen quantizer table
-        rows.sort(key=lambda r: r["cluster"])
-        cent_map = {
-            0: (
-                np.array([r["cluster"] for r in rows], dtype=np.int64),
-                np.array([r["c"] for r in rows], dtype=np.float64),
-            )
-        }
-        dvec = delta.select(
-            F.lit(0).alias("grp"),
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-        )
-        id_t = dvec.schema["id"].dataType.simpleString()
-        dd = dvec.mapInArrow(
-            _make_assign_v_fn(cent_map, None),
-            f"id {id_t}, cluster int, v array<double>",
-        ).select(F.col("cluster").alias("cell"), "id", "v")
-        cc = corpus_cells.select(
-            F.col(cell_col).alias("cell"),
-            F.col(id_col).alias("cid"),
-            to_double_array(vec_col).alias("cv"),
-        )
-        return _cell_screen_pairs(dd, cc, threshold, out_id=id_col)
-    routed = assign_to_centroids(
-        delta, centroids, id_col=id_col, vec_col=vec_col
-    ).select("id", F.col("cluster").alias(cell_col))
-    d = routed.join(
-        delta.select(
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-            l2_normalize_col(to_double_array(vec_col)).alias("nv"),
-        ),
-        "id",
+    dd = _route_to_frozen(dvec, centroids, echo_v=True).select(
+        F.col("cluster").alias("cell"), "id", "v"
     )
-    m = corpus_cells.select(
+    cc = corpus_cells.select(
+        F.col(cell_col).alias("cell"),
         F.col(id_col).alias("cid"),
-        F.col(cell_col).alias(cell_col),
         to_double_array(vec_col).alias("cv"),
-        l2_normalize_col(to_double_array(vec_col)).alias("cnv"),
     )
-    prefilter = dot_col(F.col("nv"), F.col("cnv")) >= F.lit(threshold - 0.01)
-    pairs = (
-        d.join(m, [cell_col])
-        .filter(prefilter)
-        .select(
-            F.col("id").alias("dup_id"),
-            F.col("cid").alias("keep_id"),
-            round_half_up(
-                cosine_similarity_col(F.col("v"), F.col("cv")), 4
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= F.lit(threshold))
-    )
-    return pairs.groupBy(F.col("dup_id").alias(id_col)).agg(
-        F.min("keep_id").alias("canonical_id"),
-        F.max("cos_sim").alias("max_cos"),
-    )
+    return _cell_screen_pairs(dd, cc, threshold, out_id=id_col)
 
 
 def semantic_dedup_incremental(
@@ -3248,39 +2855,15 @@ def semantic_dedup_incremental(
         route = resolve_semantic_route(
             route, n, route_threshold, spark=corpus.sparkSession
         )
-    if _assign_impl() != "sql":
-        # the corpus-side assignment kernel echoes the vector (r14), so
-        # corpus_cells needs no join back to the corpus for vec_col
-        vecs = corpus.select(
-            F.lit(0).alias("grp"),
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-        )
-        cent_map, hier_plans = _lloyd_cent_map(
-            vecs, k, iters, scale=6, single_group=True, route=route
-        )
-        id_t = vecs.schema["id"].dataType.simpleString()
-        corpus_cells = vecs.mapInArrow(
-            _make_assign_v_fn(cent_map, hier_plans),
-            f"id {id_t}, cluster int, v array<double>",
-        ).select(
-            F.col("id").alias(id_col),
-            F.col("v").alias(vec_col),
-            F.col("cluster").alias("cell"),
-        )
-        centroids = _centroids_df(
-            corpus.sparkSession, cent_map, vecs.schema["grp"].dataType
-        ).select("cluster", "c")
-    else:
-        assigned, centroids = kmeans_with_centroids(
-            corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-            route=route,
-        )
-        corpus_cells = assigned.select(
-            F.col("id").alias(id_col), F.col("cluster").alias("cell")
-        ).join(
-            corpus.select(F.col(id_col), F.col(vec_col)), id_col
-        )
+    cent_map, cells = _trained_cells(corpus, k, iters, route, id_col, vec_col)
+    corpus_cells = cells.select(
+        F.col("id").alias(id_col),
+        F.col("v").alias(vec_col),
+        F.col("cluster").alias("cell"),
+    )
+    centroids = _centroids_df(corpus.sparkSession, cent_map).select(
+        "cluster", "c"
+    )
     return semantic_dedup_screen(
         corpus_cells,
         delta,
@@ -3738,32 +3321,12 @@ def tune_lsh_bands(
         ).join(
             txt.withColumnsRenamed({"id": "doc_id_b", "t": "t_b"}), "doc_id_b"
         )
-        if _assign_impl() != "sql":
-            found = _pair_jaccard_verify(
-                joined.select("doc_id_a", "doc_id_b", "t_a", "t_b"),
-                n,
-                "doc_id_a",
-                "doc_id_b",
-            ).filter(F.col("jaccard") >= threshold).select(
-                "doc_id_a", "doc_id_b"
-            )
-        else:
-            found = (
-                joined
-                .select(
-                    "doc_id_a",
-                    "doc_id_b",
-                    round_half_up(
-                        jaccard_cols(
-                            shingles_col(tokens_col("t_a"), n),
-                            shingles_col(tokens_col("t_b"), n),
-                        ),
-                        4,
-                    ).alias("jaccard"),
-                )
-                .filter(F.col("jaccard") >= threshold)
-                .select("doc_id_a", "doc_id_b")
-            )
+        found = _pair_jaccard_verify(
+            joined.select("doc_id_a", "doc_id_b", "t_a", "t_b"),
+            n,
+            "doc_id_a",
+            "doc_id_b",
+        ).filter(F.col("jaccard") >= threshold).select("doc_id_a", "doc_id_b")
         recall = (
             1000
             if total == 0
@@ -3958,13 +3521,11 @@ def kcenter_select(
     have_md = False
     for rank in range(2, k + 2):
         lit_vec = F.array(*[F.lit(float(x)) for x in last_vec])
-        # dim=None -> the compact zip_with/aggregate fold (bit-identical
-        # to the unrolled chain): the loop pays plan analysis + codegen k
-        # times, and the unrolled 64-term tree costs ~1.5 s/round there vs
-        # ~0.25 s for the fold. One-shot ops keep the unrolled codegen'd
-        # variant; the sequential loop trades per-row codegen for O(1)
-        # plan size per round.
-        d = _fx_sq_dist(F.col("v"), lit_vec, None)
+        # the compact zip_with/aggregate fold: the loop pays plan
+        # analysis + codegen k times, and an unrolled 64-term tree cost
+        # ~1.5 s/round there vs ~0.25 s for the fold — O(1) plan size per
+        # round.
+        d = _fx_sq_dist(F.col("v"), lit_vec)
         # Lazy checkpoint: the top-1 job below evaluates every partition
         # (global TakeOrdered), which materializes the checkpoint in the
         # SAME job — one Spark job per round instead of two.
@@ -4030,7 +3591,7 @@ def kcenter_vs_random_audit(
         F.col("id").alias("pid"),
         # fold form: bit-identical, ~64x smaller expression tree (see
         # label_separation_audit — this audit is likewise planning-bound)
-        _fx_sq_dist(F.col("v"), F.col("cv"), None).alias("dist"),
+        _fx_sq_dist(F.col("v"), F.col("cv")).alias("dist"),
     )
     m = d.groupBy("method", "pid").agg(F.min("dist").alias("mind"))
     return m.groupBy("method").agg(
@@ -4092,14 +3653,14 @@ def label_separation_audit(
         base.join(F.broadcast(cent_arr), "label")
         .select(
             "label",
-            # fold form (dim=None): bit-identical to the unrolled chain
-            # (int64 addition is associative — _fx_sq_dist docstring) but
-            # a ~64x smaller expression tree; this query is DRIVER-bound
+            # fold form: a ~64x smaller expression tree than an unrolled
+            # 64-term chain (same value — int64 addition is associative,
+            # _fx_sq_dist docstring); this query is DRIVER-bound
             # (measured 0.8 s of job wall inside 4.5 s: Catalyst
             # re-optimizes three unrolled 64-term trees per AQE stage),
             # while its row counts (corpus x 1, labels^2) are far too
             # small for interpreted-fold eval cost to matter
-            _fx_sq_dist(F.col("v"), F.col("c"), None).alias("dist"),
+            _fx_sq_dist(F.col("v"), F.col("c")).alias("dist"),
         )
         .groupBy("label")
         .agg(
@@ -4119,7 +3680,7 @@ def label_separation_audit(
         .select(
             "la",
             "lb",
-            _fx_sq_dist(F.col("ca"), F.col("cb"), None).alias("dist"),
+            _fx_sq_dist(F.col("ca"), F.col("cb")).alias("dist"),
         )
     )
     bm = bd.groupBy(F.col("la").alias("label")).agg(
@@ -4492,7 +4053,7 @@ def mmr_select(
     q_lit = F.array(*[F.lit(float(x)) for x in qv])
     cand = (
         base.filter(F.col("id") != qid)
-        .withColumn("dq", _fx_sq_dist(F.col("v"), q_lit, None))
+        .withColumn("dq", _fx_sq_dist(F.col("v"), q_lit))
         .localCheckpoint(eager=True)  # dq computed exactly once
     )
     lam, mu = lambda_permille, 1000 - lambda_permille
@@ -4509,7 +4070,7 @@ def mmr_select(
             last = top[0]
             continue
         lit_vec = F.array(*[F.lit(float(x)) for x in last["v"]])
-        d = _fx_sq_dist(F.col("v"), lit_vec, None)
+        d = _fx_sq_dist(F.col("v"), lit_vec)
         cur = (
             cur.filter(F.col("id") != last["id"])
             .withColumn(

@@ -4562,8 +4562,9 @@ def _kmeans_cte_prefix_hier(
     inner_iters: int = 2,
 ) -> str:
     """Unrolled TWO-LEVEL-routed kmeans CTE chain — the SQL twin of
-    ``kmeans_lite(route="hier")`` (operators/similarity.py:
-    _argmin_assign_hier), ending at assignment CTE ``a{iters}``
+    ``kmeans_lite(route="hier")`` (operators/similarity.py:_hier_plans,
+    functions/argmin_kernel.py:build_hier_plan), ending at assignment CTE
+    ``a{iters}``
     (vec_id, cluster, fx) exactly like ``_kmeans_cte_prefix`` so the
     same final selects compose.
 
@@ -4973,7 +4974,8 @@ def _semantic_dedup_injected(spark: SparkSession, sf_dir: str, route: str) -> Da
     "emb_semantic_dedup_hier",
     _semantic_dedup_oracle_sql(route="hier"),
     doc="The 100-TB-scale routing twin of emb_semantic_dedup "
-    "(operators/similarity.py:_argmin_assign_hier): every Lloyd round "
+    "(operators/similarity.py:_hier_plans, functions/argmin_kernel.py:"
+    "build_hier_plan): every Lloyd round "
     "routes vectors TWO-LEVEL — a tiny inner k-means clusters the "
     "centroid table itself into k2=ceil(sqrt(k)) super-cells, each "
     "vector picks its nearest non-empty super-cell (n x k2 distances) "
@@ -5000,7 +5002,8 @@ SELECT CAST(cluster AS BIGINT) AS cluster,
        {_s4('CAST(sum(fx) AS DOUBLE) / 100000000.0 / count(*)')} AS avg_sq_dist
 FROM a3 GROUP BY cluster""",
     doc="kmeans_lite with two-level centroid routing "
-    "(operators/similarity.py:_argmin_assign_hier) at fixed k=8 "
+    "(operators/similarity.py:_hier_plans, functions/argmin_kernel.py:"
+    "build_hier_plan) at fixed k=8 "
     "(k2=3 super-cells) — the structural oracle pair for the hier "
     "assignment path itself, independent of the semantic-dedup sweep: "
     "cluster sizes + mean within-cluster squared distance, SQL-unrolled "

@@ -275,62 +275,35 @@ def build_eval_index(
     decontamination screen routes against: (eval_cells (vec_id,
     embedding, cell), centroids (cluster, c)). Same auto-k /
     auto-route pricing as ``semantic_dedup_incremental`` (the batch
-    twin), both checkpointed — the eval side is small and read by
-    every micro-batch."""
+    twin); cells are checkpointed and the centroid table is driver-local
+    — the eval side is small and read by every micro-batch."""
     import etl_pipeline_challenge_aladia_spark.operators.similarity as sim
-    from etl_pipeline_challenge_aladia_spark.operators.similarity import (
-        auto_semantic_k,
-        kmeans_with_centroids,
-        resolve_semantic_route,
-    )
 
     if k is None or route == "auto":
         n = eval_set.count()
         if k is None:
-            k = max(32, min(max(n, 1), auto_semantic_k(n, iters)))
-        route = resolve_semantic_route(route, n, spark=eval_set.sparkSession)
-    if sim._assign_impl() != "sql":
-        # fused build (r14): the assignment kernel echoes the vector, so
-        # cells needs no join back to the eval set, and the centroid
-        # table is rebuilt from the driver-local map (a LocalTableScan —
-        # no lineage to cut, so no checkpoint job for it either)
-        from etl_pipeline_challenge_aladia_spark.functions.vectors import (
-            to_double_array,
+            k = max(32, min(max(n, 1), sim.auto_semantic_k(n, iters)))
+        route = sim.resolve_semantic_route(
+            route, n, spark=eval_set.sparkSession
         )
-
-        vecs = eval_set.select(
-            F.lit(0).alias("grp"),
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-        )
-        cent_map, hier_plans = sim._lloyd_cent_map(
-            vecs, k, iters, scale=6, single_group=True, route=route
-        )
-        id_t = vecs.schema["id"].dataType.simpleString()
-        cells = vecs.mapInArrow(
-            sim._make_assign_v_fn(cent_map, hier_plans),
-            f"id {id_t}, cluster int, v array<double>",
-        ).select(
-            F.col("id").alias(id_col),
-            F.col("v").alias(vec_col),
-            F.col("cluster").alias("cell"),
-        ).localCheckpoint(eager=True)
-        centroids = sim._centroids_df(
-            eval_set.sparkSession, cent_map, vecs.schema["grp"].dataType
-        ).select("cluster", "c")
-        return cells, centroids
-    assigned, centroids = kmeans_with_centroids(
-        eval_set, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        route=route,
+    # fused build: the assignment kernel echoes the vector, so cells needs
+    # no join back to the eval set, and the centroid table is rebuilt from
+    # the driver-local map (a LocalTableScan — no lineage to cut, so no
+    # checkpoint job for it either)
+    cent_map, assigned = sim._trained_cells(
+        eval_set, k, iters, route, id_col, vec_col
     )
-    cells = (
-        assigned.select(
-            F.col("id").alias(id_col), F.col("cluster").alias("cell")
-        )
-        .join(eval_set.select(id_col, vec_col), id_col)
-        .localCheckpoint(eager=True)
+    cells = assigned.select(
+        F.col("id").alias(id_col),
+        # the kernel echoes array<double>; store the input's own element
+        # type (float -> double -> float is exact), not twice its width
+        F.col("v").cast(eval_set.schema[vec_col].dataType).alias(vec_col),
+        F.col("cluster").alias("cell"),
+    ).localCheckpoint(eager=True)
+    centroids = sim._centroids_df(eval_set.sparkSession, cent_map).select(
+        "cluster", "c"
     )
-    return cells, centroids.localCheckpoint(eager=True)
+    return cells, centroids
 
 
 def save_eval_index(

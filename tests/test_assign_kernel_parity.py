@@ -1,14 +1,14 @@
 """Arrow/NumPy assignment-kernel parity: the optimization contract.
 
-Round 13 swapped the fixed-point argmin assignment (and the in-cell
-cosine pair sweeps) from Catalyst expression plans to Arrow-batched
-NumPy kernels (functions/argmin_kernel.py). The optimization is only
-admissible because the kernels reproduce the JVM expressions
-BIT-FOR-BIT — these tests pin that equality by running both physical
-implementations (``SEMANTIC_ASSIGN_IMPL=sql`` vs the default ``arrow``)
-over data engineered to hit the edge semantics: exact cosine ties,
-lowest-id tie-breaks, empty clusters, multi-group (PQ) training, and
-the two-level (hier) router."""
+The fixed-point argmin assignment, the in-cell cosine pair sweeps and
+the MinHash signature/verify stages run as Arrow-batched NumPy kernels
+(functions/argmin_kernel.py), not as Catalyst expression plans. That is
+only admissible because the kernels reproduce the JVM expressions
+BIT-FOR-BIT — these tests pin that equality by running the package
+operator and its all-expression SQL twin (tests/sql_reference.py) over
+data engineered to hit the edge semantics: exact cosine ties, lowest-id
+tie-breaks, empty clusters, multi-group (PQ) training, and the
+two-level (hier) router."""
 
 from __future__ import annotations
 
@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 
 import etl_pipeline_challenge_aladia_spark.operators.similarity as sim
 from etl_pipeline_challenge_aladia_spark.functions import argmin_kernel as K
+from tests import sql_reference as ref
 
 
 @pytest.fixture()
@@ -52,67 +53,69 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _both(monkeypatch, fn):
-    monkeypatch.setenv(sim.ASSIGN_IMPL_ENV, "sql")
-    a = _rows(fn())
-    monkeypatch.setenv(sim.ASSIGN_IMPL_ENV, "arrow")
-    b = _rows(fn())
-    return a, b
+def _both(fn):
+    """(SQL reference rows, package rows) of ``fn(module)`` — ``fn``
+    builds the frame from whichever of the two modules it is handed."""
+    return _rows(fn(ref)), _rows(fn(sim))
 
 
-def test_kmeans_flat_and_hier_parity(monkeypatch, planted):
+def test_kmeans_flat_and_hier_parity(planted):
     for route in ("flat", "hier"):
         a, b = _both(
-            monkeypatch,
-            lambda: sim.kmeans_lite(planted, k=9, iters=3, route=route),
+            lambda m: m.kmeans_lite(planted, k=9, iters=3, route=route),
         )
         assert a == b and len(a) > 0
 
 
-def test_grouped_pq_parity(monkeypatch, planted):
-    a, b = _both(
-        monkeypatch, lambda: sim.pq_model(planted, blocks=4, k=3, iters=2)[0]
-    )
+def test_grouped_pq_parity(planted):
+    a, b = _both(lambda m: m.pq_model(planted, blocks=4, k=3, iters=2)[0])
     assert a == b and len(a) > 0
-    a, b = _both(
-        monkeypatch, lambda: sim.pq_model(planted, blocks=4, k=3, iters=2)[1]
-    )
+    a, b = _both(lambda m: m.pq_model(planted, blocks=4, k=3, iters=2)[1])
     assert a == b
 
 
-def test_assign_to_centroids_parity(monkeypatch, planted):
-    def run():
-        _, cents = sim.kmeans_with_centroids(planted, k=5, iters=2)
-        return sim.assign_to_centroids(
+def test_assign_to_centroids_parity(planted):
+    def run(m):
+        _, cents = m.kmeans_with_centroids(planted, k=5, iters=2)
+        return m.assign_to_centroids(
             planted.filter(F.col("vec_id") % 2 == 0), cents
         )
 
-    a, b = _both(monkeypatch, run)
+    a, b = _both(run)
     assert a == b and len(a) > 0
 
 
-def test_semantic_dedup_pair_sweep_parity(monkeypatch, planted):
+def test_empty_centroid_table_routes_nothing(spark, planted):
+    """k == 0: with no cell to route to, frozen-quantizer routing and the
+    screen built on it return zero rows, like the SQL plan's empty
+    broadcast join."""
+    cents = spark.createDataFrame([], "cluster int, c array<double>")
+    cells = planted.withColumn("cell", F.lit(1))
+    for m in (ref, sim):
+        assert m.assign_to_centroids(planted, cents).collect() == []
+        assert m.semantic_dedup_screen(
+            cells, planted, cents, threshold=0.8
+        ).collect() == []
+
+
+def test_semantic_dedup_pair_sweep_parity(planted):
     """The grouped pair kernel emits exactly the SQL plan's rows —
     including duplicates found via EXACT ties (cosine 1.0), where the
     min-id canonical and max-cos rollups must break ties identically."""
     for route in ("flat", "hier"):
-        a, b = _both(
-            monkeypatch, lambda: sim.semantic_dedup(planted, route=route)
-        )
+        a, b = _both(lambda m: m.semantic_dedup(planted, route=route))
         assert a == b and len(a) > 0
 
 
-def test_screen_and_decontaminate_parity(monkeypatch, planted):
+def test_screen_and_decontaminate_parity(planted):
     tr = planted.filter(F.col("vec_id") % 2 == 0)
     ev = planted.filter(F.col("vec_id") % 2 == 1)
     a, b = _both(
-        monkeypatch,
-        lambda: sim.semantic_decontaminate(tr, ev, threshold=0.8),
+        lambda m: m.semantic_decontaminate(tr, ev, threshold=0.8),
     )
     assert a == b and len(a) > 0
     a, b = _both(
-        monkeypatch,
-        lambda: sim.semantic_dedup_incremental(tr, ev, threshold=0.8),
+        lambda m: m.semantic_dedup_incremental(tr, ev, threshold=0.8),
     )
     assert a == b
 
@@ -190,52 +193,47 @@ def edge_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_minhash_signature_and_verify_parity(monkeypatch, edge_docs):
-    """sql-vs-arrow equality for minhash_signatures (the r13 kernel: the
-    docstring's pinned contract, previously only hand-verified) AND the
-    r14 pair-verify kernel behind minhash_near_dup_pairs, over the edge
-    fixture (None text, empty-token runs, sub-n docs, exact twins)."""
-    a, b = _both(
-        monkeypatch,
-        lambda: sim.minhash_signatures(edge_docs, n=3, num_perm=16),
-    )
+def test_minhash_signature_and_verify_parity(edge_docs):
+    """sql-vs-arrow equality for minhash_signatures (the docstring's
+    pinned contract) AND the pair-verify kernel behind
+    minhash_near_dup_pairs, over the edge fixture (None text, empty-token
+    runs, sub-n docs, exact twins)."""
+    a, b = _both(lambda m: m.minhash_signatures(edge_docs, n=3, num_perm=16))
     assert a == b and len(a) > 0
     # docs 4, 5, 7 must emit NO signature row on either side
     ids = {r[0] for r in a}
     assert ids.isdisjoint({4, 5, 7}) and {1, 2, 6, 8} <= ids
     a, b = _both(
-        monkeypatch,
-        lambda: sim.minhash_near_dup_pairs(
+        lambda m: m.minhash_near_dup_pairs(
             edge_docs, n=3, num_perm=16, bands=4, threshold=0.5
         ),
     )
     assert a == b and len(a) > 0
 
 
-def test_store_verify_parity(monkeypatch, edge_docs):
+def test_store_verify_parity(edge_docs):
     """Mixed text-vs-stored-shingle-array verify (minhash_pairs_from_store)
     is sql-vs-arrow identical, including the sub-n/None-text delta rows."""
-    def run():
-        bands_df, sh = sim.doc_signature_store(
+    def run(m):
+        bands_df, sh = m.doc_signature_store(
             edge_docs, n=3, num_perm=16, bands=4
         )
-        return sim.minhash_pairs_from_store(
+        return m.minhash_pairs_from_store(
             bands_df, sh, edge_docs, n=3, num_perm=16, bands=4, threshold=0.5
         )
 
-    a, b = _both(monkeypatch, run)
+    a, b = _both(run)
     assert a == b and len(a) > 0
 
 
-def test_mutual_knn_probe_kernel_parity(monkeypatch, planted):
-    """The fused probe+assign kernel (r14) emits the same reciprocal
-    pairs as the crossJoin + rank-window plan, on both routes (the hier
-    route's member cell comes from the two-level argmin while probes
-    rank flat — the kernel must reproduce that asymmetry)."""
+def test_mutual_knn_probe_kernel_parity(planted):
+    """The fused probe+assign kernel emits the same reciprocal pairs as
+    the crossJoin + rank-window plan, on both routes (the hier route's
+    member cell comes from the two-level argmin while probes rank flat —
+    the kernel must reproduce that asymmetry)."""
     for route in ("flat", "hier"):
         a, b = _both(
-            monkeypatch,
-            lambda: sim.mutual_knn_ivf(
+            lambda m: m.mutual_knn_ivf(
                 planted, k=4, nprobe=2, threshold=0.3, cell_col=None,
                 route=route,
             ),
@@ -248,8 +246,12 @@ def test_giant_cell_tiled_route_parity(monkeypatch, planted):
     (canon-block, dup-block) sweep + dup-grain rollup — output must be
     bit-identical to the single-group kernel AND the SQL plan (exact
     twins included, so min-canon/max-cos tie composition is exercised)."""
+    dim = 16  # the planted fixture's vector width
     want = _rows(sim.semantic_dedup(planted, route="flat"))
-    monkeypatch.setattr(K, "PAIR_GROUP_ROWS", 7)
+    assert want == _rows(ref.semantic_dedup(planted, route="flat"))
+    # a byte budget of 7 rows at this width
+    monkeypatch.setattr(K, "PAIR_GROUP_BYTES", 7 * 8 * dim)
+    assert K.pair_group_rows(dim) == 7
     got = _rows(sim.semantic_dedup(planted, route="flat"))
     assert got == want and len(got) > 0
     # n_hint=None (explicit k, no corpus count) must also take the
@@ -260,16 +262,28 @@ def test_giant_cell_tiled_route_parity(monkeypatch, planted):
                 "vec_id as id", "cast(1 as int) as cluster", "embedding as v"
             ),
             0.95,
+            dim,
         ).withColumnRenamed("vec_id", "id")
     )
-    monkeypatch.setattr(K, "PAIR_GROUP_ROWS", 1 << 16)
+    monkeypatch.setattr(K, "PAIR_GROUP_BYTES", 1 << 25)
     want2 = _rows(
         sim._cell_pair_dedup(
             planted.selectExpr(
                 "vec_id as id", "cast(1 as int) as cluster", "embedding as v"
             ),
             0.95,
+            dim,
             n_hint=planted.count(),
         ).withColumnRenamed("vec_id", "id")
     )
     assert got2 == want2 and len(got2) > 0
+
+
+def test_pair_group_cap_fits_byte_budget():
+    """The giant-cell row cap follows the vector width: 64k rows at 64
+    dims (the catalog's width), and a wide 1024-dim cell still fits the
+    per-group byte budget."""
+    assert K.pair_group_rows(64) == 1 << 16
+    for dim in (1, 16, 64, 100, 1024):
+        assert K.pair_group_rows(dim) * 8 * dim <= K.PAIR_GROUP_BYTES
+    assert K.pair_group_rows(1024) < K.pair_group_rows(64)

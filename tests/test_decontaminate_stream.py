@@ -113,3 +113,24 @@ def test_build_eval_index_routes_like_the_batch_operator(spark):
     assert seen == ["flat"]
     assert set(cells.columns) == {"vec_id", "embedding", "cell"}
     assert cells.count() == 8 and cents.count() >= 1
+
+
+def test_build_eval_index_keeps_input_vector_type(spark):
+    """The persisted eval cells keep the input's array<float> type — not
+    the kernel's echoed array<double> at twice the on-disk width — and
+    the float -> double -> float round trip returns the input values."""
+    from pyspark.sql import types as T
+
+    from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        build_eval_index,
+    )
+
+    eval_set = spark.createDataFrame(
+        [(i, [math.cos(i * 0.3), math.sin(i * 0.3), 0.1 * i]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    cells, _ = build_eval_index(eval_set, k=2)
+    assert cells.schema["embedding"].dataType == eval_set.schema["embedding"].dataType
+    assert cells.schema["embedding"].dataType.elementType == T.FloatType()
+    want = {r["vec_id"]: r["embedding"] for r in eval_set.collect()}
+    assert {r["vec_id"]: r["embedding"] for r in cells.collect()} == want
